@@ -188,8 +188,8 @@ def geo_shell_count(
     Scale shape == ``shell_count``'s (the call IS shell_count on the
     chord lattice): cell-grid ring join, no driver collect, every plan
     available (`plan=` and remaining shell_count kwargs pass through).
-    weight_col (an integer column on `points`) adds a `wsum` column —
-    join plans only, exactly as in shell_count (ADVICE r3: the column
+    weight_col (an integer column on `points`) adds a `wsum` column on
+    every plan, exactly as in shell_count (ADVICE r3: the column
     must survive the lat/lon->lattice embedding, so it is an explicit
     parameter here, not a kwarg).
     """

@@ -9,7 +9,7 @@ Reference semantics (SURVEY §2.3 J1/J2, §2.4 A1, §2.11):
   (``MultiRangeCount.c:13-73``), valid while r_max < box/2;
 * zero-distance pairs ARE counted (STR semantics, SURVEY §2.11.4).
 
-Spark plan (both variants share the cell-grid candidate generation):
+Spark plans (the two join variants share the cell-grid candidate generation):
 
   halos --cell+ring explode--> (cell_id, halo_id, hx, hy, hz)   [27x rows]
   particles --cell assign----> (cell_id, px, py, pz)            [1x rows]
@@ -25,6 +25,9 @@ Spark plan (both variants share the cell-grid candidate generation):
   matrix and emits per-(halo, shell) partial counts via np.bincount
   (the analog of the reference's in-place ``counts[i]++`` fusion,
   ``MultiRangeCount.c:110``).  Wins when pairs/cell is large.
+* plan="bcast" / "dgrid": one side CSR-packed by cell and broadcast,
+  the other streamed through ``_ring_sweep`` — the one probe-and-bin
+  loop of the broadcast plans (and of correlation's 1-NN kernel).
 
 Output: long-form (halo_id, shell_idx, cnt), nonzero rows only — the
 dense (nhalos x nshells) matrix of the reference is a presentation
@@ -34,6 +37,7 @@ concern (see sources/report.py).
 from __future__ import annotations
 
 from collections.abc import Iterable
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -170,6 +174,21 @@ A_SQL_SEC_PER_ROW = 2.3e-6
 # terms don't explain).  Keeps tiny jobs on sql.
 F_FUSED_FIXED_CORE_SEC = 5.0
 
+# the broadcast-grid plans (bcast, dgrid) run on cells of size
+# r_max / _BCAST_CELL_MULT probed ring-k: empty cells are free in the
+# CSR layout and the ring bookkeeping is a few numpy ops per streamed
+# row INSIDE the kernel, never a row, so the finer grid cuts candidate
+# pairs toward the ball volume.  2 is the measured optimum
+# (BENCH/BASELINE.md, dgrid cell-refinement sweep: mult 2 4.7 s,
+# 3 6.0 s, 4 140 s).
+_BCAST_CELL_MULT = 2
+# dense CSR offsets up to this many cells (64 MB of int32); finer grids
+# fall back to a searchsorted over the sorted cell keys
+_DENSE_CELLS = 16_000_000
+# candidate pairs _ring_sweep expands at once (measured on the 1-NN and
+# dgrid kernels: 2^16 beats 2^18 and one expansion per batch)
+_SWEEP_PAIRS = 1 << 16
+
 
 def choose_plan(
     n_halos: int,
@@ -210,14 +229,13 @@ def choose_plan(
     from .cells import expected_ring_cells
 
     nc_bcast = grid_ncells(rmax, box)
-    grid_bytes = min(nc_bcast**3, 16_000_000) * 4
-    # a weight adds one int64 per particle to the dgrid payload; the
-    # bcast plan stays count-only (its sort-reduce kernel has no
-    # weighted twin — see shell_count docstring)
+    grid_bytes = min(nc_bcast**3, _DENSE_CELLS) * 4
+    # a weight adds one int64 per particle to the dgrid payload; bcast
+    # streams the weights with the particles, so its grid is unchanged
     per_particle = 36 if weighted else 28
     if n_particles * per_particle + grid_bytes <= max_broadcast_bytes:
         return "dgrid"
-    if not weighted and n_halos * 40 + grid_bytes <= max_broadcast_bytes:
+    if n_halos * 40 + grid_bytes <= max_broadcast_bytes:
         return "bcast"
 
     nc_sql = ncells or grid_ncells(
@@ -261,7 +279,6 @@ def shell_count(
     max_salt: int = 64,
     n_halos_est: int | None = None,
     n_particles_est: int | None = None,
-    bcast_cell_mult: int = 2,
     cell_mult: int = 1,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -270,15 +287,16 @@ def shell_count(
     weight_col: optional integer weight column on the particle side —
     the output gains `wsum long` = sum of weights per (halo, shell)
     (mass-weighted radial profiles, the natural generalization of the
-    reference's count-only A1).  Supported by the join plans
-    ('sql'/'fused'), which aggregate arbitrary expressions for free,
-    and by 'dgrid' (the broadcast data grid carries one int64 weight
-    per particle; the kernel bincounts weights alongside counts with
-    the same 2^53-exactness guard as the fused kernel).  'bcast'
-    raises: there the weight lives on the streamed side and its
-    sort-reduce kernel ships unit counts only.  `plan='auto'` with a
-    weight considers dgrid/sql/fused.  Keep weights integer for
-    bit-exact cross-engine sums.
+    reference's count-only A1).  Every plan supports it: the join
+    plans ('sql'/'fused') aggregate arbitrary expressions for free;
+    'dgrid' broadcasts one int64 weight per particle and bincounts
+    weights alongside counts (the fused kernel's 2^53-exactness
+    guard); 'bcast' streams each particle's weight with its pairs into
+    an exact int64 sort-reduce.  Keep weights integer for bit-exact
+    cross-engine sums.
+
+    id_col keeps its input type on every plan (long, int or string
+    halo ids).
 
     plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel), or
     'auto' — pick by estimated pairs/core (choose_plan).  'auto' needs
@@ -290,11 +308,10 @@ def shell_count(
     salt_threshold: if set, run the dense-cell salting pre-pass
     (apply_salting) so no hot cell serializes one reducer/task.
 
-    bcast_cell_mult: grid-refinement factor for the broadcast plans —
-    cells of size rmax/mult probed with ring-mult offsets + Euclidean
-    slab pruning.  2 cuts candidate pairs ~2x vs ring-1 at matched
-    correctness (measured, BENCH/BASELINE.md); ignored when `ncells`
-    is passed explicitly.
+    The broadcast plans ('bcast'/'dgrid') run on cells of size
+    rmax/_BCAST_CELL_MULT (2) probed with ring-2 offsets + Euclidean
+    slab pruning: ~2x fewer candidate pairs than ring-1 at matched
+    correctness (measured, BENCH/BASELINE.md); `ncells` overrides it.
 
     cell_mult: the same refinement for the 'sql' join plan.  Default 1
     — a MEASURED negative result (round 4, CPU-pinned ref shape): the
@@ -320,14 +337,6 @@ def shell_count(
             n_h, n_est, rmax, box, ncells, cell_mult=cell_mult,
             weighted=weight_col is not None,
         )
-    if weight_col is not None and plan == "bcast":
-        raise ValueError(
-            "weight_col is not supported by plan='bcast': its sort-"
-            "reduce kernel ships unit counts only (the weight lives on "
-            "the STREAMED side there, so a weighted twin would have to "
-            "materialize per-pair weights — use 'dgrid' when the data "
-            "side fits the broadcast budget, else 'sql'/'fused')"
-        )
     if plan == "fused" and ncells is None:
         # the Arrow kernel wants dense cells: target ~128 particles/cell.
         # Still true after the round-4 bucketed-cogroup rewrite (which
@@ -340,28 +349,20 @@ def shell_count(
         cap = max(2, int(round((n_est / 128) ** (1.0 / 3.0))))
         ncells = max(1, min(grid_ncells(float(np.asarray(edges)[-1]), box), cap))
     if plan in ("bcast", "dgrid"):
-        # no shuffle at all -> salting is moot; empty cells are free in
-        # the CSR layout, so a grid FINER than ring-1 (cells of size
-        # rmax/cell_mult probed with a ring-cell_mult neighborhood) is
-        # available via bcast_cell_mult: the Euclidean prune tightens
-        # the candidate set from the (3*rmax)^3 ring-1 cube toward the
-        # ball volume itself, at the price of more ring bookkeeping
-        # per streamed row (VERDICT r2 top item: candidate volume)
+        # no shuffle at all -> salting is moot; the Euclidean prune of
+        # the finer-than-ring-1 grid tightens the candidate set from
+        # the (3*rmax)^3 ring-1 cube toward the ball volume itself
         edges = np.asarray(edges)
         rmax = float(edges[-1])
         if not rmax < box / 2:
             raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-        nc = ncells or grid_ncells(rmax / bcast_cell_mult, box)
+        nc = ncells or grid_ncells(rmax / _BCAST_CELL_MULT, box)
         # ring depth follows the grid: k*cell_size must cover rmax
         ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
-        if plan == "dgrid":
-            return _dgrid_plan(
-                halos, particles, squared_edges(edges), box, dtype, id_col,
-                nc, h_coords, p_coords, ring_k=ring_k, weight_col=weight_col,
-            )
-        return _bcast_plan(
+        grid_plan = _dgrid_plan if plan == "dgrid" else _bcast_plan
+        return grid_plan(
             halos, particles, squared_edges(edges), box, dtype, id_col, nc,
-            h_coords, p_coords, ring_k=ring_k,
+            h_coords, p_coords, ring_k=ring_k, weight_col=weight_col,
         )
     h, p, nc, edges = _prep(
         halos, particles, edges, box, id_col, h_coords, p_coords, ncells,
@@ -449,7 +450,7 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
         hkey = hkey[ho]
         pkey = pkey[po]
         H = left[list(_H)].to_numpy(np_dtype)[ho]
-        ids = left[id_col].to_numpy(np.int64)[ho]
+        ids = left[id_col].to_numpy()[ho]
         P = right[list(_P)].to_numpy(np_dtype)[po]
         if weight_col:
             w = right[weight_col].to_numpy(np.int64)[po]
@@ -513,9 +514,7 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
             cols["wsum"] = accw[nz]
         return pd.DataFrame(cols)
 
-    schema = f"{id_col} long, shell_idx int, cnt long" + (
-        ", wsum long" if weight_col else ""
-    )
+    schema = _count_schema(h, id_col, bool(weight_col))
     bkt = F.pmod(F.col(join_key), F.lit(n_buckets)).cast("int").alias("_bkt")
     hsel = [F.col(id_col), *[F.col(c) for c in _H], F.col(join_key), bkt]
     psel = [*[F.col(c) for c in _P], F.col(join_key), bkt] + (
@@ -555,268 +554,217 @@ def _build_grid(
     pass and the driver still has to collect every row afterwards;
     argsort+gather of 6M rows is ~0.8s vs ~3s of sort overhead) — and
     the serial work is bounded by the same broadcast budget that gates
-    this plan, so it cannot grow past ~16M rows.  Dense CSR offsets
-    over the nc^3 grid when it fits (64 MB int32 at 16M cells); the
-    sorted key array is shipped ONLY for the searchsorted fallback on
-    absurdly fine grids — with dense offsets the kernels never touch
-    it, and dropping it cuts the broadcast ~35%.
+    this plan, so it cannot grow past ~16M rows.  Ids pass through in
+    their input type; weights are int64.
     Returns (broadcast, n_rows)."""
-    from .cells import with_cell
-
     cols = ([id_col] if id_col else []) + list(coords)
     if weight_col:
         cols.append(weight_col)
-    keyed = with_cell(side.select(*cols), ncells, box, cols=coords)
-    tbl = keyed.toArrow()
-    key = np.asarray(tbl.column("cell_id"))
-    n = len(key)
+    tbl = with_cell(side.select(*cols), ncells, box, cols=coords).toArrow()
+    extra = {}
+    if id_col:
+        extra["ids"] = np.asarray(tbl.column(id_col))
+    if weight_col:
+        extra["W"] = np.asarray(tbl.column(weight_col)).astype(
+            np.int64, copy=False)
+    xyz = [np.asarray(tbl.column(c)).astype(np_dtype, copy=False)
+           for c in coords]
+    grid = _csr_grid(np.asarray(tbl.column("cell_id")), ncells, xyz, **extra)
+    return side.sparkSession.sparkContext.broadcast(grid), len(tbl)
+
+
+def _csr_grid(key: np.ndarray, nc: int, xyz, **cols) -> dict:
+    """CSR layout of one side by cell key: coords ``x``/``y``/``z`` and
+    every extra column in key order, plus dense per-cell offsets
+    ``starts`` over the nc^3 grid (64 MB of int32 at _DENSE_CELLS) or,
+    on absurdly fine grids, the sorted ``keys`` for a searchsorted
+    lookup — with dense offsets the kernels never touch the keys, and
+    leaving them out cuts the broadcast ~35%."""
     # introsort, NOT stable: every kernel output is a per-id integer
     # count, invariant to row order within a cell, and default argsort
     # is ~2.4x faster than the stable radix at 6M keys (profiled)
     order = np.argsort(key)
-    xs = [
-        np.asarray(tbl.column(c)).astype(np_dtype, copy=False)[order]
-        for c in coords
-    ]
-    payload = {"Hx": xs[0], "Hy": xs[1], "Hz": xs[2]}
-    if id_col:
-        payload["ids"] = np.asarray(tbl.column(id_col)).astype(
-            np.int64, copy=False)[order]
-    if weight_col:
-        payload["W"] = np.asarray(tbl.column(weight_col)).astype(
-            np.int64, copy=False)[order]
-    nc = ncells
-    if nc**3 <= 16_000_000:
+    grid = {a: v[order] for a, v in zip("xyz", xyz)}
+    grid.update({c: v[order] for c, v in cols.items()})
+    if nc**3 <= _DENSE_CELLS:
         counts = np.bincount(key, minlength=nc**3)
-        payload["starts"] = np.concatenate(([0], np.cumsum(counts))).astype(
-            np.int32 if n < 2**31 else np.int64
+        grid["starts"] = np.concatenate(([0], np.cumsum(counts))).astype(
+            np.int32 if len(key) < 2**31 else np.int64
         )
     else:
-        payload["keys"] = key[order]
-    return side.sparkSession.sparkContext.broadcast(payload), n
+        grid["keys"] = key[order]
+    return grid
 
 
-def _ring_geometry(nc: int, cs: float, kk: int, rmax2_infl: float):
+class _Ring(NamedTuple):
+    """What _ring_sweep needs to know of a grid and the radius."""
+
+    nc: int
+    cs: float
+    k: int
+    offs: np.ndarray  # ring-k cell offsets in -k..k, mod-dedup'd, pruned
+    doff: np.ndarray  # the same offsets as interior cell-key deltas
+    prune_ok: bool
+    fastpath_ok: bool
+    r2: np.ndarray  # squared edges in the kernel dtype
+    rmax2_infl: float  # f64 r_max^2, inflated for the cell prune
+    box: np.floating  # in the kernel dtype
+
+
+def _ring_geometry(nc: int, box: float, kk: int, r2: np.ndarray,
+                   np_dtype) -> _Ring:
     """Ring-k offsets (mod-dedup'd), offset-level Euclidean prune, the
     interior neighbor-key delta LUT, and the two fast-path gates."""
+    cs = box / nc
+    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
     offs = ring_offsets(nc, k=kk)
     half = nc // 2
     raw_offs = np.array(
         [[m if m <= half else m - nc for m in o] for o in offs], dtype=np.int64
     )
-    if nc > 2 * kk:
+    prune_ok = nc > 2 * kk
+    if prune_ok:
         # a whole ring cell is out of range for EVERY probe point when
         # its min per-axis gap (|o|-1 full cells) already exceeds rmax
         # — e.g. the 8 corner cells at k=3
         omin = np.maximum(np.abs(raw_offs) - 1, 0) * cs
         raw_offs = raw_offs[(omin * omin).sum(axis=1) < rmax2_infl]
+    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
     doff = (raw_offs[:, 0] * nc + raw_offs[:, 1]) * nc + raw_offs[:, 2]
-    prune_ok = nc >= 2 * kk + 1
     # interior pairs have |d|_axis <= (k+1)*cs <= 2box/5 < box/2 with a
     # wide margin, so the min-image fold can never flip within an ulp
     # of the box/2 boundary
     fastpath_ok = 2 * nc >= 5 * (kk + 1)
-    return raw_offs, doff, prune_ok, fastpath_ok
+    return _Ring(nc, cs, kk, raw_offs, doff.astype(key_t), prune_ok,
+                 fastpath_ok, np.asarray(r2, dtype=np_dtype), rmax2_infl,
+                 np_dtype(box))
 
 
-def _bcast_plan(
-    halos: DataFrame,
-    particles: DataFrame,
-    r2: np.ndarray,
-    box: float,
-    dtype: str,
-    id_col: str,
-    ncells: int,
-    h_coords: tuple[str, str, str],
-    p_coords: tuple[str, str, str],
-    ring_k: int = 1,
-) -> DataFrame:
-    """Broadcast-halo-grid plan: stream the BIG table map-side only.
+def _ring_sweep(grid: dict, geom: _Ring, Q: np.ndarray, Q64: np.ndarray):
+    """Yield (q_row, data_idx, d2) for every pair of a streamed row
+    ``Q[q_row]`` and a grid row ``data_idx`` with ``d2 < r2[-1]``.
 
-    The reference holds its whole index in memory per node and streams
-    probes past it (``src/astr_rcount/main.c``); this is the same
-    architecture with the sides flipped to fit Spark's broadcast model:
-    the probe (halo) table — the small side by the workload's own shape
-    (10M probes vs 3x100M particles in the published run) — is sorted
-    by cell key into a CSR layout, broadcast once, and every particle
-    partition counts against it in a numpy kernel.  The 100 TB particle
-    table is NEVER shuffled, exploded, or cogrouped: one scan, map-side
-    partial (halo, shell) counts, and a tiny final aggregation whose
-    input is bounded by nonzero (halo, shell) cells per partition.
-    Requires the halo side to fit in executor memory (~40 B/halo: 10M
-    halos ≈ 400 MB — the same assumption the reference makes per node).
+    The one probe-and-bin loop of the broadcast-grid plans (bcast,
+    dgrid and the 1-NN kernel, the analog of the reference's shared
+    ``MultiRangeCount.c``); each caller only accumulates.  Q64 is the
+    batch at input precision: cells and the slab prune come from it
+    (with_cell's f64 floor, so cell assignment is plan-invariant); Q,
+    in the kernel dtype, enters only the distances.  Yields nothing
+    for a part of the batch with no pair in range.
 
-    Candidate work per particle = halos in the ring-k cell neighborhood
-    around it (k = ring_k; cells of size rmax/k), cut by a per-probe
-    Euclidean slab prune.  A finer-than-rmax grid (ring_k >= 2) trades
-    a few more candidate CELLS for far fewer candidate PAIRS: the kept
-    volume shrinks from the (3*rmax)^3 ring-1 cube toward the ball
-    volume plus one cell-width shell — the closest Spark-shaped analog
-    of the reference tree's tight MBR descent, and the r2-verdict fix
-    for the candidates/probe gap.  Numerics are identical to the fused
-    kernel (f32-safe
-    (dx2+dy2)+dz2, strict-< first-match searchsorted binning), so the
-    byte-exact golden tests hold for this plan too.
+    Hot-path design (profiled stage-by-stage, round 3 — the per-cell
+    bookkeeping, not the distance math, dominated the round-2 kernel):
 
-    Kernel hot-path design (profiled stage-by-stage, round 3): the
-    per-candidate-cell bookkeeping — not the distance math — dominated
-    the round-2 kernel (int64 ``% nc`` wrap + per-group np.repeat were
-    ~60% of wall time).  Now:
+    * rows whose cell is >= k from every box face take a FAST path:
+      the neighbor key is one add against the interior delta LUT (no
+      modulo), and the distance skips the min-image fold — exact,
+      because every candidate pair then has per-axis |d| <= (k+1)*cs
+      <= 2box/5, where min(|d|, box-|d|) provably picks |d| and
+      |d|^2 == d^2 in IEEE f32;
+    * one vectorized pass per ring offset (contiguous adds, two int32
+      gathers, the slab prune) — ~2x the row-masked (n, noffs) variant:
+      no 2-D boolean nonzero, no int64 anywhere in the hot loop;
+    * empty and pruned candidate cells drop before the pair expansion,
+      which is ONE np.repeat + one arange per slice of ~_SWEEP_PAIRS
+      candidate pairs (cache-resident); grid coords are contiguous
+      1-D arrays, so the per-pair gather is a flat np.take, and the
+      streamed coords are np.repeat'ed values;
+    * int32 wherever the bounds allow — half the bytes every gather,
+      sort and multiply touches (profiled ~25% of kernel time);
+    * f32-exact (dx2+dy2)+dz2, then ``d2 < r2max`` drops most pairs
+      before any caller bins them (~40% survive at the reference-
+      matched shape); one flatnonzero + a take per output is cheaper
+      than a boolean-mask compaction of each output.
 
-    * particles whose cell is >= 1 from every box face (the vast
-      majority; requires nc >= 5) take a FAST path: neighbor cell key
-      is one add against a precomputed offset LUT (no modulo), and the
-      pair distance skips the min-image fold entirely — exact, because
-      every candidate pair then has per-axis separation <= 2*cs <=
-      box/2, where ``min(|d|, box-|d|)`` provably picks ``|d|`` and
-      ``|d|^2 == d^2`` in IEEE f32;
-    * empty candidate cells are dropped before pair expansion, and the
-      expansion builds the halo index in ONE np.repeat + one arange
-      (was three repeats);
-    * halo coords are broadcast as three CONTIGUOUS 1-D arrays so the
-      per-pair gather is a flat ``np.take``, and the probe coords are
-      np.repeat'ed values (4 B floats), never 8 B row indices;
-    * pairs are pre-filtered with ``d2 < r2_max`` (typically only a few
-      % survive at reference shapes) before the 40-edge searchsorted.
+    q_row is int32 (a batch row); data_idx is int32 unless the grid
+    or a slice's candidate count passes 2^31.
     """
-    np_dtype = np.float32 if dtype == "float32" else np.float64
-    spark = halos.sparkSession
-    bc, m = _build_grid(halos, h_coords, id_col, ncells, box, np_dtype)
-    nc = ncells
-    cs = box / nc
-    r2k = np.asarray(r2, dtype=np_dtype)
-    r2max = r2k[-1]
-    nr = len(r2k)
-    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
-    kk = ring_k
-    raw_offs, doff, prune_ok, fastpath_ok = _ring_geometry(
-        nc, cs, kk, rmax2_infl)
-    bx = np_dtype(box)
-
-    # int32 wherever the bounds allow — halves the bytes every gather,
-    # sort, and multiply touches vs int64 (profiled ~25% of kernel time)
-    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
-    out_t = np.int32 if m * nr < 2**31 - 1 else np.int64
-    doff_t = doff.astype(key_t)
-    oidx = raw_offs + kk  # raw offset -k..+k -> gap-table column
-
-    def _reduce(keys: np.ndarray, cnts: np.ndarray):
-        o = np.argsort(keys, kind="stable")
-        k, c = keys[o], cnts[o]
-        b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
-        return k[b], np.add.reduceat(c, b)
-
-    def _count(keys: np.ndarray):
-        # sort-reduce of unit counts: ~4x cheaper than a dense bincount
-        # over the m*nr domain at typical keys/task volumes (measured),
-        # and it never touches an O(m*nr) accumulator
-        ks = np.sort(keys)
-        b = np.nonzero(np.r_[True, ks[1:] != ks[:-1]])[0]
-        return ks[b], np.diff(np.r_[b, len(ks)]).astype(np.int64)
-
-    def kern(batches):
-        import os as _os
-        import time as _time
-
-        prof = _os.environ.get("SJCS_KERN_PROF") == "1"
-        cpu0 = _time.thread_time()
-        data = bc.value
-        Hx, Hy, Hz = data["Hx"], data["Hy"], data["Hz"]
-        ids_s, keys_s = data["ids"], data.get("keys")
-        starts = data.get("starts")
-        st0 = st1 = None
-        if starts is not None:
-            st0, st1 = starts[:-1], starts[1:]
-        comp: list[tuple[np.ndarray, np.ndarray]] = []
-        raw: list[np.ndarray] = []
-        raw_n = 0
-
-        def flush():
-            nonlocal raw, raw_n
-            if not raw:
-                return
-            k = np.concatenate(raw)
-            if len(k) * 4 > m * nr:
-                b = np.bincount(k, minlength=m * nr)  # keys outnumber domain
-                knz = np.nonzero(b)[0]
-                comp.append((knz.astype(k.dtype), b[knz]))
+    nc, cs, kk = geom.nc, geom.cs, geom.k
+    Dx, Dy, Dz = grid["x"], grid["y"], grid["z"]
+    keys_s, starts = grid.get("keys"), grid.get("starts")
+    if starts is not None:
+        st0, st1 = starts[:-1], starts[1:]
+    key_t = geom.doff.dtype
+    idx_t = np.int32 if len(Dx) < 2**31 - 1 else np.int64
+    oidx = geom.offs + kk  # raw offset -k..+k -> gap-table row
+    r2max, bx = geom.r2[-1], geom.box
+    pc = np.clip(np.floor(Q64 / cs), 0, nc - 1).astype(np.int64)
+    if geom.fastpath_ok:
+        inner = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
+        parts = ((np.nonzero(inner)[0], False), (np.nonzero(~inner)[0], True))
+    else:
+        parts = ((np.arange(len(Q)), True),)
+    for rows, fold in parts:
+        n = len(rows)
+        if n == 0:
+            continue
+        P, P64, prc = Q[rows], Q64[rows], pc[rows]
+        if geom.prune_ok:
+            # per-(axis, slab) squared gaps, contiguous in n: gap to the
+            # slab at offset |o| = within-cell face gap plus |o|-1 full
+            # cells (the vectorized MBR prune)
+            G = np.empty((3, 2 * kk + 1, n), dtype=np.float64)
+            for a in range(3):
+                lo_f = prc[:, a].astype(np.float64) * cs
+                gm = P64[:, a] - lo_f
+                gp = lo_f + cs - P64[:, a]
+                G[a, kk] = 0.0
+                for j in range(1, kk + 1):
+                    gmj = gm + (j - 1) * cs
+                    gpj = gp + (j - 1) * cs
+                    G[a, kk - j] = gmj * gmj
+                    G[a, kk + j] = gpj * gpj
+        pck = prc.astype(key_t)
+        pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
+        pis, los, cns = [], [], []
+        for j in range(len(oidx)):
+            if fold:
+                qc = (prc + geom.offs[j]) % nc
+                qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
             else:
-                comp.append(_count(k))
-            raw, raw_n = [], 0
-
-        def run_cols(P, P64s, pc, fold):
-            """Column-at-a-time ring sweep over one particle subset.
-
-            One vectorized pass per ring offset (contiguous adds + two
-            int32 gathers + the slab prune) beats the row-masked
-            (n, noffs) variant ~2x: no 2-D boolean nonzero, no fancy
-            (n, noffs) gap gathers, no int64 anywhere in the hot loop.
-            fold=True takes the periodic min-image path (boundary
-            cells); fold=False is exact without folding (interior,
-            per-axis |d| <= (k+1)*cs < box/2)."""
-            nonlocal raw_n
-            n = len(P)
-            if n == 0:
-                return
-            if prune_ok:
-                # per-(axis, slab) squared gaps, contiguous in n:
-                # gap to slab at offset |o| = within-cell face gap
-                # plus |o|-1 full cells (the vectorized MBR prune)
-                G = np.empty((3, 2 * kk + 1, n), dtype=np.float64)
-                for a in range(3):
-                    lo_f = pc[:, a].astype(np.float64) * cs
-                    gm = P64s[:, a] - lo_f
-                    gp = lo_f + cs - P64s[:, a]
-                    G[a, kk] = 0.0
-                    for j in range(1, kk + 1):
-                        gmj = gm + (j - 1) * cs
-                        gpj = gp + (j - 1) * cs
-                        G[a, kk - j] = gmj * gmj
-                        G[a, kk + j] = gpj * gpj
-            pck = pc.astype(key_t)
-            pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
-            pis, los, cns = [], [], []
-            for j in range(len(raw_offs)):
-                if fold:
-                    qc = (pc + raw_offs[j]) % nc
-                    qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
-                else:
-                    qk = pkey + doff_t[j]
-                if st0 is not None:
-                    lo_i = st0[qk]
-                    cn = st1[qk] - lo_i
-                else:
-                    lo_i = np.searchsorted(keys_s, qk, side="left")
-                    cn = np.searchsorted(keys_s, qk, side="right") - lo_i
-                if prune_ok:
-                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
-                    g2 += G[2, oidx[j, 2]]
-                    keep = (cn > 0) & (g2 < rmax2_infl)
-                else:
-                    keep = cn > 0
-                idx = np.nonzero(keep)[0]
-                if len(idx) == 0:
-                    continue
-                pis.append(idx)
-                los.append(lo_i[idx])
-                cns.append(cn[idx])
-            if not pis:
-                return
-            pi0 = np.concatenate(pis)
-            lo_c = np.concatenate(los).astype(out_t)
-            cnt = np.concatenate(cns).astype(np.int64)
+                qk = pkey + geom.doff[j]
+            if starts is not None:
+                lo_i = st0[qk]
+                cn = st1[qk] - lo_i
+            else:
+                lo_i = np.searchsorted(keys_s, qk, side="left")
+                cn = np.searchsorted(keys_s, qk, side="right") - lo_i
+            if geom.prune_ok:
+                g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
+                g2 += G[2, oidx[j, 2]]
+                keep = (cn > 0) & (g2 < geom.rmax2_infl)
+            else:
+                keep = cn > 0
+            idx = np.nonzero(keep)[0]
+            if len(idx) == 0:
+                continue
+            pis.append(idx)
+            los.append(lo_i[idx])
+            cns.append(cn[idx])
+        if not pis:
+            continue
+        pi_all = np.concatenate(pis)
+        lo_all = np.concatenate(los).astype(idx_t)
+        cn_all = np.concatenate(cns).astype(np.int64)
+        # one batch-wide expansion ran the 1-NN kernel ~35% slower than
+        # slices of ~_SWEEP_PAIRS pairs (and its memory is unbounded)
+        cend = np.cumsum(cn_all)
+        cuts = np.searchsorted(
+            cend, np.arange(_SWEEP_PAIRS, cend[-1], _SWEEP_PAIRS), side="right")
+        for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(cend)]):
+            if a == b:
+                continue
+            pi0, lo_c, cnt = pi_all[a:b], lo_all[a:b], cn_all[a:b]
             total = int(cnt.sum())
-            if total == 0:
-                return
-            idx_t = out_t if total < 2**31 - 1 else np.int64
+            et = idx_t if total < 2**31 - 1 else np.int64
             c0 = np.cumsum(cnt) - cnt
-            hidx = np.arange(total, dtype=idx_t)
-            hidx += np.repeat((lo_c - c0).astype(idx_t), cnt)
-            dx = np.take(Hx, hidx)
+            didx = np.arange(total, dtype=et)
+            didx += np.repeat((lo_c - c0).astype(et), cnt)
+            dx = np.take(Dx, didx)
             dx -= np.repeat(P[pi0, 0], cnt)
-            dy = np.take(Hy, hidx)
+            dy = np.take(Dy, didx)
             dy -= np.repeat(P[pi0, 1], cnt)
-            dz = np.take(Hz, hidx)
+            dz = np.take(Dz, didx)
             dz -= np.repeat(P[pi0, 2], cnt)
             if fold:
                 # min-image fold, f32-exact ((dx2+dy2)+dz2 order kept)
@@ -831,61 +779,135 @@ def _bcast_plan(
             dz *= dz
             d2 = dx + dy
             d2 += dz
-            inr = d2 < r2max  # cheap prefilter before the 40-edge bin
-            if not inr.any():
+            sel = np.flatnonzero(d2 < r2max)
+            if len(sel) == 0:
+                continue
+            q_row = np.repeat(rows[pi0].astype(np.int32), cnt)
+            yield q_row[sel], didx[sel], d2[sel]
+
+def _count_schema(side: DataFrame, id_col: str, weighted: bool) -> str:
+    """Output schema of the kernel plans: the id keeps its input type
+    (string halo ids pass through uncast)."""
+    t = side.schema[id_col].dataType.simpleString()
+    return f"{id_col} {t}, shell_idx int, cnt long" + (
+        ", wsum long" if weighted else "")
+
+
+def _bcast_plan(
+    halos: DataFrame,
+    particles: DataFrame,
+    r2: np.ndarray,
+    box: float,
+    dtype: str,
+    id_col: str,
+    ncells: int,
+    h_coords: tuple[str, str, str],
+    p_coords: tuple[str, str, str],
+    ring_k: int = 1,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Broadcast-halo-grid plan: stream the BIG table map-side only.
+
+    The reference holds its whole index in memory per node and streams
+    probes past it (``src/astr_rcount/main.c``); this is the same
+    architecture with the sides flipped to fit Spark's broadcast model:
+    the probe (halo) table — the small side by the workload's own shape
+    (10M probes vs 3x100M particles in the published run) — is sorted
+    by cell key into a CSR layout, broadcast once, and every particle
+    partition counts against it through _ring_sweep.  The 100 TB
+    particle table is NEVER shuffled, exploded, or cogrouped: one scan,
+    map-side partial (halo, shell) counts, and a tiny final aggregation
+    whose input is bounded by nonzero (halo, shell) cells per partition.
+    Requires the halo side to fit in executor memory (~40 B/halo: 10M
+    halos ≈ 400 MB — the same assumption the reference makes per node).
+
+    Candidate work per particle = halos in the ring-k cell neighborhood
+    around it (cells of size rmax/k), cut by a per-probe Euclidean slab
+    prune: a finer-than-rmax grid trades a few more candidate CELLS for
+    far fewer candidate PAIRS — the closest Spark-shaped analog of the
+    reference tree's tight MBR descent.
+
+    Accumulator: a sort-reduce keyed by halo row * nshells + shell.
+    Unit counts (_count) when unweighted; with weight_col each pair
+    also carries its streamed particle's int64 weight and the exact
+    int64 _reduce sums both.
+    """
+    np_dtype = np.float32 if dtype == "float32" else np.float64
+    bc, m = _build_grid(halos, h_coords, id_col, ncells, box, np_dtype)
+    geom = _ring_geometry(ncells, box, ring_k, r2, np_dtype)
+    r2k = geom.r2
+    nr = len(r2k)
+    out_t = np.int32 if m * nr < 2**31 - 1 else np.int64
+
+    def _reduce(keys: np.ndarray, *vals: np.ndarray):
+        o = np.argsort(keys, kind="stable")
+        k = keys[o]
+        b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
+        return (k[b], *(np.add.reduceat(v[o], b) for v in vals))
+
+    def _count(keys: np.ndarray):
+        # sort-reduce of unit counts: ~4x cheaper than a dense bincount
+        # over the m*nr domain at typical keys/task volumes (measured),
+        # and it never touches an O(m*nr) accumulator
+        ks = np.sort(keys)
+        b = np.nonzero(np.r_[True, ks[1:] != ks[:-1]])[0]
+        return ks[b], np.diff(np.r_[b, len(ks)]).astype(np.int64)
+
+    def kern(batches):
+        grid = bc.value
+        comp: list[tuple[np.ndarray, ...]] = []  # reduced (key, cnt[, wsum])
+        raw: list[tuple[np.ndarray, ...]] = []  # per-pair (key[, weight])
+        raw_n = 0
+
+        def flush():
+            nonlocal raw, raw_n
+            if not raw:
                 return
-            sh = np.searchsorted(r2k, d2[inr], side="right").astype(out_t)
-            keys = hidx[inr].astype(out_t) * out_t(nr) + sh
-            raw.append(keys)
-            raw_n += len(keys)
-            if raw_n > 24_000_000:
-                flush()
+            k, *w = (np.concatenate(c) for c in zip(*raw))
+            if w:
+                comp.append(_reduce(k, np.ones(len(k), np.int64), *w))
+            elif len(k) * 4 > m * nr:
+                b = np.bincount(k, minlength=m * nr)  # keys outnumber domain
+                knz = np.nonzero(b)[0]
+                comp.append((knz.astype(k.dtype), b[knz]))
+            else:
+                comp.append(_count(k))
+            raw, raw_n = [], 0
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            # bin from original precision (plan-invariant cells); the
-            # kernel-dtype copy is used only for distances
             P64 = pdf[list(_P)].to_numpy(np.float64)
-            P = P64.astype(np_dtype)
-            pc = np.clip(np.floor(P64 / cs), 0, nc - 1).astype(np.int64)
-            if fastpath_ok:
-                interior = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
-                ii = np.nonzero(interior)[0]
-                bi = np.nonzero(~interior)[0]
-                run_cols(P[ii], P64[ii], pc[ii], fold=False)
-                run_cols(P[bi], P64[bi], pc[bi], fold=True)
-            else:
-                run_cols(P, P64, pc, fold=True)
+            W = pdf[weight_col].to_numpy(np.int64) if weight_col else None
+            for q_row, hidx, d2 in _ring_sweep(
+                    grid, geom, P64.astype(np_dtype), P64):
+                sh = np.searchsorted(r2k, d2, side="right").astype(out_t)
+                keys = hidx.astype(out_t, copy=False) * out_t(nr) + sh
+                raw.append((keys,) if W is None else (keys, W[q_row]))
+                raw_n += len(keys)
+                if raw_n > 24_000_000:
+                    flush()
         flush()
-        if prof:
-            # per-task kernel CPU (thread_time: immune to hypervisor
-            # steal, unlike wall clock) -> driver stderr in local mode
-            import json as _json
-            import sys as _sys
-
-            print("SJCS_KERN_PROF " + _json.dumps(
-                {"task_cpu_s": round(_time.thread_time() - cpu0, 3)}),
-                file=_sys.stderr, flush=True)
         if not comp:
             return
-        k = np.concatenate([x[0] for x in comp])
-        c = np.concatenate([x[1] for x in comp])
-        k, c = _reduce(k, c)
-        if len(k):
-            yield pd.DataFrame(
-                {
-                    id_col: ids_s[(k // nr).astype(np.int64)],
-                    "shell_idx": (k % nr).astype(np.int32),
-                    "cnt": c.astype(np.int64),
-                }
-            )
+        k, c, *ws = _reduce(*(np.concatenate(x) for x in zip(*comp)))
+        cols = {
+            id_col: grid["ids"][(k // nr).astype(np.int64)],
+            "shell_idx": (k % nr).astype(np.int32),
+            "cnt": c.astype(np.int64),
+        }
+        if ws:
+            cols["wsum"] = ws[0]
+        yield pd.DataFrame(cols)
 
     out = particles.select(
-        *[F.col(c).alias(a) for c, a in zip(p_coords, _P)]
-    ).mapInPandas(kern, schema=f"{id_col} long, shell_idx int, cnt long")
-    return out.groupBy(id_col, "shell_idx").agg(F.sum("cnt").alias("cnt"))
+        *[F.col(c).alias(a) for c, a in zip(p_coords, _P)],
+        *([F.col(weight_col)] if weight_col else []),
+    ).mapInPandas(kern, schema=_count_schema(halos, id_col, bool(weight_col)))
+    aggs = [F.sum("cnt").alias("cnt")]
+    if weight_col:
+        aggs.append(F.sum("wsum").alias("wsum"))
+    return out.groupBy(id_col, "shell_idx").agg(*aggs)
 
 
 def _dgrid_plan(
@@ -907,10 +929,10 @@ def _dgrid_plan(
     and streams probes past it (``src/astr_rcount/main.c``); this plan
     is the 1:1 Spark analog: the PARTICLE table is cell-sorted into a
     CSR grid, broadcast once, and the (small) probe table streams
-    through ``mapInPandas``.  Every probe's shell counts complete
-    inside its own task, so the output needs NO shuffle and NO
-    aggregation — the map output IS the result.  Two structural wins
-    over plan='bcast' at in-memory data scales:
+    through ``mapInPandas`` and _ring_sweep.  Every probe's shell
+    counts complete inside its own task, so the output needs NO
+    shuffle and NO aggregation — the map output IS the result.  Two
+    structural wins over plan='bcast' at in-memory data scales:
 
     * ring bookkeeping (neighbor keys, CSR lookups, slab prune) is per
       PROBE, and probes are typically 10x fewer than particles;
@@ -923,172 +945,53 @@ def _dgrid_plan(
     particle; the reference's own published run holds 3x100M particles
     ~5 GB per node the same way).  Beyond the broadcast budget use
     plan='bcast' (stream the 100 TB side); choose_plan gates on both
-    budgets.  Numerics identical to the other plans (f32-safe
-    (dx2+dy2)+dz2, strict-< searchsorted binning, min-image fold only
-    where a pair can wrap) — pinned by the same golden tests.
+    budgets.  With weight_col the grid carries one int64 weight per
+    particle, bincounted next to the counts.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
-    bc, n_data = _build_grid(particles, p_coords, None, ncells, box, np_dtype,
-                             weight_col=weight_col)
-    nc = ncells
-    cs = box / nc
-    r2k = np.asarray(r2, dtype=np_dtype)
-    r2max = r2k[-1]
+    bc, _ = _build_grid(particles, p_coords, None, ncells, box, np_dtype,
+                        weight_col=weight_col)
+    geom = _ring_geometry(ncells, box, ring_k, r2, np_dtype)
+    r2k = geom.r2
     nr = len(r2k)
-    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
-    kk = ring_k
-    raw_offs, doff, prune_ok, fastpath_ok = _ring_geometry(
-        nc, cs, kk, rmax2_infl)
-    bx = np_dtype(box)
-    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
-    idx_t = np.int32 if n_data < 2**31 - 1 else np.int64
-    doff_t = doff.astype(key_t)
-    oidx = raw_offs + kk
 
     def kern(batches):
-        import os as _os
-        import time as _time
-
-        prof = _os.environ.get("SJCS_KERN_PROF") == "1"
-        cpu0 = _time.thread_time()
-        data = bc.value
-        Px, Py, Pz = data["Hx"], data["Hy"], data["Hz"]
-        W = data.get("W")
-        keys_s = data.get("keys")
-        starts = data.get("starts")
-        st0 = st1 = None
-        if starts is not None:
-            st0, st1 = starts[:-1], starts[1:]
-
-        def sweep(H, H64s, pc, fold, acc, base_idx, accw=None):
-            n = len(H)
-            if n == 0:
-                return
-            if prune_ok:
-                G = np.empty((3, 2 * kk + 1, n), dtype=np.float64)
-                for a in range(3):
-                    lo_f = pc[:, a].astype(np.float64) * cs
-                    gm = H64s[:, a] - lo_f
-                    gp = lo_f + cs - H64s[:, a]
-                    G[a, kk] = 0.0
-                    for j in range(1, kk + 1):
-                        gmj = gm + (j - 1) * cs
-                        gpj = gp + (j - 1) * cs
-                        G[a, kk - j] = gmj * gmj
-                        G[a, kk + j] = gpj * gpj
-            pck = pc.astype(key_t)
-            pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
-            pis, los, cns = [], [], []
-            for j in range(len(raw_offs)):
-                if fold:
-                    qc = (pc + raw_offs[j]) % nc
-                    qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
-                else:
-                    qk = pkey + doff_t[j]
-                if st0 is not None:
-                    lo_i = st0[qk]
-                    cn = st1[qk] - lo_i
-                else:
-                    lo_i = np.searchsorted(keys_s, qk, side="left")
-                    cn = np.searchsorted(keys_s, qk, side="right") - lo_i
-                if prune_ok:
-                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
-                    g2 += G[2, oidx[j, 2]]
-                    keep = (cn > 0) & (g2 < rmax2_infl)
-                else:
-                    keep = cn > 0
-                idx = np.nonzero(keep)[0]
-                if len(idx) == 0:
-                    continue
-                pis.append(idx)
-                los.append(lo_i[idx])
-                cns.append(cn[idx])
-            if not pis:
-                return
-            pi0 = np.concatenate(pis)
-            lo_c = np.concatenate(los).astype(idx_t)
-            cnt = np.concatenate(cns).astype(np.int64)
-            total = int(cnt.sum())
-            if total == 0:
-                return
-            et = idx_t if total < 2**31 - 1 else np.int64
-            c0 = np.cumsum(cnt) - cnt
-            didx = np.arange(total, dtype=et)
-            didx += np.repeat((lo_c - c0).astype(et), cnt)
-            dx = np.take(Px, didx)
-            dx -= np.repeat(H[pi0, 0], cnt)
-            dy = np.take(Py, didx)
-            dy -= np.repeat(H[pi0, 1], cnt)
-            dz = np.take(Pz, didx)
-            dz -= np.repeat(H[pi0, 2], cnt)
-            if fold:
-                np.abs(dx, out=dx)
-                np.minimum(dx, bx - dx, out=dx)
-                np.abs(dy, out=dy)
-                np.minimum(dy, bx - dy, out=dy)
-                np.abs(dz, out=dz)
-                np.minimum(dz, bx - dz, out=dz)
-            dx *= dx
-            dy *= dy
-            dz *= dz
-            d2 = dx + dy
-            d2 += dz
-            inr = d2 < r2max
-            if not inr.any():
-                return
-            sh = np.searchsorted(r2k, d2[inr], side="right").astype(np.int64)
-            # probe-local accumulation: batch_row * nr + shell, dense
-            probe = np.repeat(base_idx[pi0], cnt)[inr]
-            keys = probe * nr + sh
-            acc += np.bincount(keys, minlength=len(acc))
-            if accw is not None:
-                # per-pair particle weights: same exactness guard as the
-                # fused kernel — bincount's f64 partials are exact while
-                # every intermediate stays under 2^53
-                wk = W[didx[inr]]
-                if np.abs(wk).sum() < 2.0**53:
-                    accw += np.bincount(
-                        keys, weights=wk, minlength=len(accw)
-                    ).astype(np.int64)
-                else:
-                    np.add.at(accw, keys, wk)
-
+        grid = bc.value
+        W = grid.get("W")
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
             H64 = pdf[list(_H)].to_numpy(np.float64)
-            H = H64.astype(np_dtype)
-            ids_b = pdf[id_col].to_numpy(np.int64)
-            pc = np.clip(np.floor(H64 / cs), 0, nc - 1).astype(np.int64)
             acc = np.zeros(n * nr, dtype=np.int64)
             accw = np.zeros(n * nr, dtype=np.int64) if W is not None else None
-            rows = np.arange(n, dtype=np.int64)
-            if fastpath_ok:
-                interior = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
-                ii = np.nonzero(interior)[0]
-                bi = np.nonzero(~interior)[0]
-                sweep(H[ii], H64[ii], pc[ii], False, acc, rows[ii], accw)
-                sweep(H[bi], H64[bi], pc[bi], True, acc, rows[bi], accw)
-            else:
-                sweep(H, H64, pc, True, acc, rows, accw)
+            for q_row, didx, d2 in _ring_sweep(
+                    grid, geom, H64.astype(np_dtype), H64):
+                # probe-local accumulation: batch_row * nr + shell, dense
+                keys = q_row.astype(np.int64) * nr + np.searchsorted(
+                    r2k, d2, side="right")
+                acc += np.bincount(keys, minlength=len(acc))
+                if accw is not None:
+                    # per-pair particle weights: same exactness guard as
+                    # the fused kernel — bincount's f64 partials are
+                    # exact while every intermediate stays under 2^53
+                    wk = W[didx]
+                    if np.abs(wk).sum() < 2.0**53:
+                        accw += np.bincount(
+                            keys, weights=wk, minlength=len(accw)
+                        ).astype(np.int64)
+                    else:
+                        np.add.at(accw, keys, wk)
             nz = np.nonzero(acc)[0]
             if len(nz):
                 out_cols = {
-                    id_col: ids_b[nz // nr],
+                    id_col: pdf[id_col].to_numpy()[nz // nr],
                     "shell_idx": (nz % nr).astype(np.int32),
                     "cnt": acc[nz],
                 }
                 if accw is not None:
                     out_cols["wsum"] = accw[nz]
                 yield pd.DataFrame(out_cols)
-        if prof:
-            import json as _json
-            import sys as _sys
-
-            print("SJCS_KERN_PROF " + _json.dumps(
-                {"task_cpu_s": round(_time.thread_time() - cpu0, 3)}),
-                file=_sys.stderr, flush=True)
 
     probes = halos.select(
         F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]
@@ -1099,9 +1002,8 @@ def _dgrid_plan(
     par = halos.sparkSession.sparkContext.defaultParallelism
     if probes.rdd.getNumPartitions() < par:
         probes = probes.repartition(par)
-    schema = f"{id_col} long, shell_idx int, cnt long" + (
-        ", wsum long" if weight_col else "")
-    return probes.mapInPandas(kern, schema=schema)
+    return probes.mapInPandas(
+        kern, schema=_count_schema(halos, id_col, bool(weight_col)))
 
 
 def range_join_pairs(

@@ -12,6 +12,7 @@ randomized coverage the example-based tests can't reach:
   (``src/objects/ArraySTR/MultiRangeCount.c:13-73`` equivalence),
 * ring-offset dedup modulo the grid (the correctness core of
   ``explode_ring`` / the broadcast kernels' neighbor sweep),
+* the broadcast-grid ring sweep's pair set and bits vs brute force,
 * the SQL-derivable poly hash vs an independent big-int evaluation.
 
 No SparkSession needed — this module runs in milliseconds.
@@ -19,7 +20,10 @@ No SparkSession needed — this module runs in milliseconds.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -47,6 +51,12 @@ from spatialjoincountovershells_spark.functions.texthash import (
 from spatialjoincountovershells_spark.operators.cells import (
     grid_ncells,
     ring_offsets,
+)
+from spatialjoincountovershells_spark.operators.shell_count import (
+    _SWEEP_PAIRS,
+    _csr_grid,
+    _ring_geometry,
+    _ring_sweep,
 )
 
 # ------------------------------------------------------------- shell binning
@@ -195,6 +205,79 @@ def test_ring_offsets_dedup_mod_grid(nc, k):
             for o in offs
         }
         assert got == want
+
+
+# ------------------------------------------------------------- ring sweep
+
+# coordinates biased onto cell faces, the box faces and the cell mid-lines
+# (the slab-prune and fold boundaries), plus free values in [0, box)
+sweep_coord = st.one_of(
+    st.integers(min_value=0, max_value=4 * 12 - 1).map(lambda i: i * 1000.0 / 48),
+    st.floats(min_value=0.0, max_value=np.nextafter(1000.0, 0.0)),
+)
+sweep_points = st.lists(st.tuples(sweep_coord, sweep_coord, sweep_coord),
+                        max_size=40)
+
+
+@pytest.mark.parametrize(
+    "nc,k,prune_ok,fastpath_ok",
+    [
+        (2, 1, False, False),  # nc < 2k+1: the ring is the whole grid
+        (4, 1, True, False),
+        (9, 1, True, True),
+        (4, 2, False, False),
+        (7, 2, True, False),
+        (12, 2, True, True),
+    ],
+)
+@pytest.mark.parametrize("sparse", [False, True])
+@pytest.mark.parametrize("sweep_pairs", [None, 3])
+@given(
+    ds=sweep_points,
+    qs=sweep_points.filter(len),
+    frac=st.floats(min_value=0.05, max_value=1.0),
+    f32=st.booleans(),
+)
+@settings(max_examples=40, deadline=None)
+def test_ring_sweep_equals_brute_force(nc, k, prune_ok, fastpath_ok, sparse,
+                                       sweep_pairs, ds, qs, frac, f32):
+    """_ring_sweep emits exactly the periodic pairs with d2 < r_max^2,
+    each once, with d2 bit-equal to the min-image (dx2+dy2)+dz2 — on
+    the interior no-fold path, the folded boundary path, with and
+    without the slab prune, on dense offsets and the sparse keys, in
+    one pair expansion per batch part or in many small ones."""
+    box = 1000.0
+    dt = np.float32 if f32 else np.float64
+    cs = box / nc
+    # shell_count's ring depth k covers r_max: r_max <= k*cs, < box/2
+    rmax = min(frac * k * cs, 499.0)
+    r2 = squared_edges(np.array([rmax / 3, rmax], dtype=np.float32))
+    geom = _ring_geometry(nc, box, k, r2, dt)
+    assert (geom.prune_ok, geom.fastpath_ok) == (prune_ok, fastpath_ok)
+    D = np.array(ds, dtype=dt).reshape(-1, 3)
+    Q = np.array(qs, dtype=dt).reshape(-1, 3)
+    D64 = D.astype(np.float64)
+    pc = np.clip(np.floor(D64 / cs), 0, nc - 1).astype(np.int64)
+    key = (pc[:, 0] * nc + pc[:, 1]) * nc + pc[:, 2]
+    grid = _csr_grid(key, nc, [D[:, 0], D[:, 1], D[:, 2]], row=np.arange(len(D)))
+    if sparse:
+        grid["keys"] = np.repeat(np.arange(nc**3), np.diff(grid.pop("starts")))
+    got = {}
+    with mock.patch(
+            "spatialjoincountovershells_spark.operators.shell_count"
+            "._SWEEP_PAIRS", sweep_pairs or _SWEEP_PAIRS):
+        for q_row, didx, d2 in _ring_sweep(grid, geom, Q, Q.astype(np.float64)):
+            assert d2.dtype == dt
+            for q, i, v in zip(q_row, didx, d2):
+                pair = (int(q), int(grid["row"][i]))
+                assert pair not in got
+                got[pair] = v.tobytes()
+    d = np.abs(Q[:, None, :] - D[None, :, :])
+    d = np.minimum(d, dt(box) - d)
+    b2 = (d[..., 0] * d[..., 0] + d[..., 1] * d[..., 1]) + d[..., 2] * d[..., 2]
+    want = {(int(q), int(i)): b2[q, i].tobytes()
+            for q, i in zip(*np.nonzero(b2 < geom.r2[-1]))}
+    assert got == want
 
 
 @given(

@@ -148,13 +148,12 @@ def test_choose_plan_measured_regimes():
     assert choose_plan(60_000, 600_000, rmax=20.0, max_broadcast_bytes=0) == "sql"
     assert choose_plan(600_000, 6_000_000, rmax=20.0, max_broadcast_bytes=0) == "fused"
     assert choose_plan(600_000, 6_000_000, rmax=12.77, max_broadcast_bytes=0) == "fused"
-    # a weight keeps dgrid (its grid carries int64 weights, r4) but
-    # excludes bcast (count-only kernel): probe side fits, data side
-    # doesn't -> falls through to the join-plan cost model
+    # a weight keeps dgrid (its grid carries int64 weights, r4) and
+    # bcast (the weights stream with the particles)
     assert choose_plan(60_000, 600_000, rmax=20.0, weighted=True) == "dgrid"
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0,
-                       weighted=True) in ("sql", "fused")
+                       weighted=True) == "bcast"
 
 
 def test_plan_auto_matches_sql(spark):
@@ -184,7 +183,7 @@ def test_self_join_autocorr_counts(spark):
     assert dense.tolist() == want.tolist()
 
 
-@pytest.mark.parametrize("plan", ["sql", "fused", "dgrid"])
+@pytest.mark.parametrize("plan", ["sql", "fused", "bcast", "dgrid"])
 def test_weighted_shell_sums(spark, plan):
     """weight_col: per-(halo, shell) integer weight sums (mass-weighted
     radial profiles) match a float64 min-image brute force exactly, and
@@ -227,14 +226,28 @@ def test_weighted_shell_sums(spark, plan):
     assert gw.tolist() == want_w.tolist()
 
 
-def test_weight_col_rejected_on_bcast_plan(spark):
+@pytest.mark.parametrize("plan", ["sql", "fused", "bcast", "dgrid", "auto"])
+def test_string_halo_ids_match_sql(spark, plan):
+    """String halo ids (the images table's 'halo%012d' shape) pass
+    through every plan uncast and typed as on input; counts equal the
+    integer-id sql run."""
     from pyspark.sql import functions as F
 
-    halos = _df_points(spark, PB_HALOS, id_col="halo_id")
-    parts = _df_points(spark, PB_PARTICLES).withColumn("w", F.lit(1))
-    with pytest.raises(ValueError, match="unit counts only"):
-        shell_count(halos, parts, logspace_edges(1.0, 60.0, 6),
-                    plan="bcast", weight_col="w")
+    P = synth_points_np(800, seed=5)
+    H = synth_points_np(40, seed=1005)
+    edges = logspace_edges(10.0, 300.0, 8)
+    parts = _df_points(spark, P)
+    halos = _df_points(spark, H, id_col="halo_id")
+    want = sorted(
+        (f"halo{r.halo_id:012d}", r.shell_idx, r.cnt)
+        for r in shell_count(halos, parts, edges, plan="sql").collect()
+    )
+    shalos = halos.withColumn(
+        "halo_id", F.format_string("halo%012d", "halo_id"))
+    got = shell_count(shalos, parts, edges, plan=plan,
+                      n_halos_est=len(H), n_particles_est=len(P))
+    assert got.schema["halo_id"].dataType.simpleString() == "string"
+    assert sorted(tuple(r) for r in got.collect()) == want
 
 
 @pytest.mark.parametrize("ls_plan", ["sql", "fused"])
