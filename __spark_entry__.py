@@ -1431,6 +1431,8 @@ FROM g
 
 
 def _simhash_sql() -> str:
+    """SimHash oracle (mirrors operators/dedup.simhash).  Tokens split on
+    the explicit Java ``\\s`` class — RE2's ``\\s`` lacks VT (0x0b)."""
     bitsums = ",\n  ".join(
         f"sum(CASE WHEN {affine_sql('base', b)} % 2 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(64)
@@ -1440,7 +1442,7 @@ def _simhash_sql() -> str:
         for b in range(64)
     )
     return f"""
-WITH tok0 AS (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents),
+WITH tok0 AS (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+')) AS tok FROM documents),
 tok AS (SELECT doc_id, tok FROM tok0 WHERE length(tok) > 0),
 hb AS (SELECT doc_id, {poly_hash_duck("tok")} AS base FROM tok),
 bits AS (SELECT doc_id, {bitsums} FROM hb GROUP BY doc_id)

@@ -1,5 +1,5 @@
-"""Arrow-vectorized twin of the texthash base hash, as a DataFrame
-column projection.
+"""The texthash base hash as an Arrow-vectorized DataFrame column
+projection.
 
 ``poly_hash_spark`` (functions/texthash.py) is an
 aggregate-over-transform SQL higher-order function; Spark evaluates HOF
@@ -15,7 +15,7 @@ product stays < 2^62 so the values are bit-identical to the SQL forms
 in Spark and DuckDB (pinned by test_arrowhash_matches_sql).
 
 NULL hashes to NULL, '' to 0, and only the first MAXLEN codepoints
-count — exactly the expr semantics.
+count — exactly the SQL semantics.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .texthash import MAXLEN, P, POWS
 
@@ -59,7 +60,10 @@ def with_poly_hash_arrow(
     df: DataFrame, col: str, out: str = "_base", max_len: int = MAXLEN
 ) -> DataFrame:
     """Append ``out`` = texthash base hash of string column ``col`` via
-    one mapInPandas pass; every other column passes through."""
+    one mapInPandas pass; every other column passes through.  Raises
+    ValueError if ``out`` is already a column of ``df``."""
+    if out in df.columns:
+        raise ValueError(f"with_poly_hash_arrow: column {out!r} already exists")
 
     def op(batches):
         for pdf in batches:
@@ -74,5 +78,5 @@ def with_poly_hash_arrow(
                 pdf[out] = hashes
             yield pdf
 
-    fields = ", ".join(f"{n} {t}" for n, t in df.dtypes)
-    return df.mapInPandas(op, schema=f"{fields}, {out} long")
+    schema = StructType([*df.schema.fields, StructField(out, LongType())])
+    return df.mapInPandas(op, schema=schema)

@@ -494,13 +494,12 @@ def pq_ann_topk(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     if candidates is None and not exhaustive:
-        # cheap metadata-or-count guard: the exhaustive baseline is
-        # O(n^2) pair rows and must be an explicit choice beyond toy n
-        n = emb.count()
-        if n > exhaustive_limit:
+        # the exhaustive baseline is O(n^2) pair rows and must be an
+        # explicit choice beyond toy n; limit(+1) stops the scan early
+        if emb.limit(exhaustive_limit + 1).count() > exhaustive_limit:
             raise ValueError(
                 f"pq_ann_topk without candidates= is an exhaustive "
-                f"cross join ({n} corpus rows -> ~{n * n:.0e} pairs). "
+                f"cross join (more than {exhaustive_limit} corpus rows). "
                 f"Pass candidates=ivf_candidates(...) (IVF+PQ), or "
                 f"exhaustive=True to insist."
             )

@@ -81,12 +81,11 @@ def ann_l2_topk(
     """
     spark = emb.sparkSession
     if candidates is None and queries is None and not exhaustive:
-        n = emb.count()
-        if n > exhaustive_limit:
+        if emb.limit(exhaustive_limit + 1).count() > exhaustive_limit:
             raise ValueError(
                 f"ann_l2_topk without candidates= is an exact "
-                f"all-pairs search ({n} corpus rows -> ~{n * n:.0e} "
-                f"distances). Pass candidates= (lsh_cosine_pairs / "
+                f"all-pairs search (more than {exhaustive_limit} corpus "
+                f"rows). Pass candidates= (lsh_cosine_pairs / "
                 f"ivf_candidates output), a small queries= frame, or "
                 f"exhaustive=True to insist."
             )

@@ -132,18 +132,24 @@ def checkpoint(df: DataFrame, path: str, token: str) -> dict:
     metrics = [r.asDict() for r in partition_metrics(back).collect()]
     meta = {"token": token, "n_rows": int(sum(m["n_rows"] for m in metrics)),
             "partitions": metrics}
-    with open(_marker(path), "w") as f:
+    # temp file + fsync + rename: a crash mid-write leaves no partial marker
+    tmp = _marker(path) + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(meta, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, _marker(path))
     return meta
 
 
 def resume(spark: SparkSession, path: str, token: str) -> DataFrame | None:
-    """Return the checkpointed DataFrame if `token` completed, else None."""
-    m = _marker(path)
-    if not os.path.exists(m):
+    """Return the checkpointed DataFrame if `token` completed, else None.
+    A marker that cannot be parsed counts as absent (recompute)."""
+    try:
+        with open(_marker(path)) as f:
+            meta = json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError, UnicodeDecodeError):
         return None
-    with open(m) as f:
-        meta = json.load(f)
     if meta.get("token") != token:
         return None
     return read_table(spark, path)

@@ -2,9 +2,12 @@
 the operators rebuilt on it: MinHash-LSH, SimHash, doc_fingerprint,
 DF-capped n-gram Jaccard, and the similarity-search rewrites.
 
-The three-engine agreement test (Spark expr == DuckDB == numpy) is the
+The three-engine agreement test (Spark SQL == DuckDB == numpy) is the
 load-bearing one: it is what entitles the driver's hash-comparing
-oracle gate to check these operators at all.
+oracle gate to check these operators at all.  Each Arrow hash kernel
+is checked against an independent reference — a DuckDB oracle from
+__spark_entry__.py or a numpy mirror built on poly_hash_np — never
+against itself.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ from pyspark.sql import functions as F
 
 from spatialjoincountovershells_spark.functions.texthash import (
     MAXLEN,
+    POW2S,
+    P,
     affine_consts,
     poly_hash_duck,
     poly_hash_np,
@@ -84,8 +89,7 @@ def test_simhash_near_dup_small_hamming(spark):
 
 def test_simhash_pairs_bruteforce_recall(spark):
     """Banding must find EVERY pair with hamming < bands (pigeonhole) —
-    compare against a brute force over the signatures, and pin that the
-    whole pipeline stays JVM-side."""
+    compare against a brute force over the signatures."""
     from spatialjoincountovershells_spark.operators.dedup import simhash_pairs
 
     base = "spark catalyst optimizes declarative dataframe plans into stages "
@@ -106,12 +110,6 @@ def test_simhash_pairs_bruteforce_recall(spark):
             if h <= 3:
                 want[(a, b)] = h
     df = simhash_pairs(docs, max_hamming=3)
-    # the expr engine stays pure-JVM (the streaming-safe path)
-    plan = (
-        simhash_pairs(docs, max_hamming=3, engine="expr")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
     got = {(r.doc_a, r.doc_b): r.hamming for r in df.collect()}
     assert got == want and (0, 1) in got and got[(0, 1)] == 0
 
@@ -156,15 +154,46 @@ def test_arrowhash_matches_sql(spark):
     assert got[7] == want[7] and got[6] is not None
 
 
-def test_simhash_arrow_matches_expr(spark):
+def test_arrowhash_odd_column_names_and_existing_out(spark):
+    """Column names that need backticks in DDL pass through, and an
+    `out` column that already exists is rejected."""
+    from spatialjoincountovershells_spark.functions.arrowhash import (
+        with_poly_hash_arrow,
+    )
+
+    df = spark.createDataFrame(
+        [(0, "a b"), (1, "hello")], "`doc id` long, `my-tok` string"
+    )
+    out = with_poly_hash_arrow(df, "my-tok")
+    assert out.columns == ["doc id", "my-tok", "_base"]
+    got = sorted(tuple(r) for r in out.collect())
+    want = poly_hash_np(["a b", "hello"])
+    assert got == [(0, "a b", int(want[0])), (1, "hello", int(want[1]))]
+    with pytest.raises(ValueError, match="_base"):
+        with_poly_hash_arrow(out, "my-tok")
+
+
+def _duck_documents(sql: str, texts) -> dict:
+    """Run a DuckDB oracle over a `documents` table of (doc_id, text)
+    -> {doc_id: value of the oracle's second column}."""
+    import __spark_entry__ as entrymod
+
+    pdf = pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    rows = con.execute(getattr(entrymod, sql)()).fetchall()
+    return {int(r[0]): int(r[1]) for r in rows}
+
+
+def test_simhash_matches_duckdb(spark):
     """The vectorized simhash kernel must be bit-identical to the
-    all-JVM expr path: multi-whitespace runs (tab/CR/LF/VT/FF),
+    DuckDB oracle: multi-whitespace runs (tab/CR/LF/VT/FF),
     NON-ASCII whitespace (\\xa0 is a token char in Java \\s — both
-    engines must agree), >MAXLEN tokens, unicode, leading/trailing
+    sides must agree), >MAXLEN tokens, unicode, leading/trailing
     whitespace, and no-token docs (empty / all-whitespace / NULL)
     which must emit NO row."""
-    from spatialjoincountovershells_spark.operators.dedup import simhash
-
     texts = [
         "plain words here",
         "  leading and trailing  ",
@@ -180,16 +209,15 @@ def test_simhash_arrow_matches_expr(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-    want = {r.doc_id: r.simhash for r in simhash(docs, engine="expr").collect()}
+    want = _duck_documents("_simhash_sql", texts)
     assert got == want
     assert 5 not in got and 6 not in got and 7 not in got and 0 in got
 
 
 def test_doc_fingerprint_engines_agree_and_dup_equal(spark):
-    """Arrow default == pure-JVM expr path bit-for-bit (incl. the
-    zero-padded short-text window, empty text and unicode), the expr
-    path stays Python-free for streaming, and duplicate docs share a
-    fingerprint."""
+    """The Arrow kernel == the DuckDB oracle bit-for-bit (incl. the
+    zero-padded short-text window, empty text and unicode), and
+    duplicate docs share a fingerprint."""
     texts = [
         "abcdefghijklmnopqrstuvwxyz0123",
         "abcdefghijklmnopqrstuvwxyz0123",
@@ -198,11 +226,9 @@ def test_doc_fingerprint_engines_agree_and_dup_equal(spark):
         "café ☃ naïve \U0001f600 sixteen+ chars of unicode",
     ]
     df = doc_fingerprint(_docs(spark, texts))
-    expr = doc_fingerprint(_docs(spark, texts), engine="expr")
-    plan = expr._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
     out = df.orderBy("doc_id").toPandas()
-    assert out.fingerprint.tolist() == expr.orderBy("doc_id").toPandas().fingerprint.tolist()
+    want = _duck_documents("_doc_fingerprint_sql", texts)
+    assert out.fingerprint.tolist() == [want[i] for i in range(len(texts))]
     assert out.fingerprint[0] == out.fingerprint[1]
     assert (out.fingerprint >= 0).all()
 
@@ -399,55 +425,89 @@ def test_phash_near_dup_bruteforce_recall(spark):
 
 def test_minhash_rowwise_buckets_match_grouped(spark):
     """The shuffle-free per-row bucket derivation (minhash_band_buckets)
-    must be bit-identical to the grouped signature path
-    (minhash_signatures -> band keys): min over the shingle multiset
-    equals min over its distinct set.  Includes repeated-shingle,
-    sub-shingle-length, empty and unicode texts."""
-    from spatialjoincountovershells_spark.functions.texthash import band_key_sql
+    must be bit-identical to a grouped signature path — the DuckDB
+    oracle's DISTINCT shingles -> GROUP BY doc_id min -> band keys:
+    min over the shingle multiset equals min over its distinct set.
+    Includes repeated-shingle, sub-shingle-length, empty and unicode
+    texts."""
+    import __spark_entry__ as entrymod
+    from spatialjoincountovershells_spark.functions.texthash import (
+        affine_sql,
+        band_key_sql,
+        poly_hash_fixed_duck,
+    )
     from spatialjoincountovershells_spark.operators.dedup import (
         minhash_band_buckets,
-        minhash_signatures,
     )
 
     texts = SAMPLES + ["abababababababab", "the the the the the", "tiny"]
+    n_hashes, bands, shingle_n = 32, 8, 8
+    r = n_hashes // bands
+    mins = ", ".join(
+        f"min({affine_sql('base', i)}) AS mh_{i}" for i in range(n_hashes)
+    )
+    band_selects = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, "
+        f"{band_key_sql([f'mh_{b * r + j}' for j in range(r)])} AS key FROM sig"
+        for b in range(bands)
+    )
+    sql = f"""
+WITH {entrymod._shingle_cte(shingle_n, min_len=shingle_n)},
+hb AS (SELECT doc_id, {poly_hash_fixed_duck("shingle", shingle_n)} AS base FROM sh),
+sig AS (SELECT doc_id, {mins} FROM hb GROUP BY doc_id)
+{band_selects}"""
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pd.DataFrame(
+            {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}
+        ),
+    )
+    want = {(int(d), int(b), int(k)) for d, b, k in con.execute(sql).fetchall()}
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    n_hashes, bands = 32, 8
-    r = n_hashes // bands
-    sig = minhash_signatures(docs, n_hashes=n_hashes)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(band_key_sql([f"mh_{b * r + j}" for j in range(r)])).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    grouped = sig.select(
-        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    rowwise = minhash_band_buckets(docs)
-    got = {tuple(x) for x in rowwise.collect()}
-    want = {tuple(x) for x in grouped.collect()}
+    got = {tuple(x) for x in minhash_band_buckets(docs).collect()}
     assert got == want
-    # and the per-row path stays pure JVM (no Python eval in the plan)
-    plan = rowwise._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
+    assert {d for d, _, _ in want} == {
+        i for i, t in enumerate(texts) if len(t) >= shingle_n
+    }
 
 
-def test_minhash_arrow_buckets_match_expr(spark):
-    """The vectorized Arrow bucket kernel must be bit-identical to the
-    pure-SQL expr path on minhash_lsh_pairs' guard domain (text
-    non-null, len >= shingle_n): unicode, exact-boundary-length,
-    repeated-shingle, and long texts; and the two engine= routes of
-    minhash_lsh_pairs must agree pair-for-pair."""
+def _minhash_buckets_np(texts, n_hashes=32, bands=8, shingle_n=8) -> set:
+    """numpy mirror of minhash_band_buckets -> {(doc_id, band, key)}:
+    explicit shingle strings through poly_hash_np, then the affine
+    streams' min and the POW2S band key — no convolution, no Spark."""
+    r = n_hashes // bands
+    streams = [affine_consts(i) for i in range(n_hashes)]
+    out = set()
+    for doc_id, t in enumerate(texts):
+        if t is None or len(t) < shingle_n:
+            continue  # minhash_band_buckets' guard: no bucket rows
+        sh = [t[i:i + shingle_n] for i in range(len(t) - shingle_n + 1)]
+        base = poly_hash_np(sh, shingle_n)
+        mh = [int(((a * base + c) % P).min()) for a, c in streams]
+        for b in range(bands):
+            key = sum(mh[b * r + j] * POW2S[j] % P for j in range(r)) % P
+            out.add((doc_id, b, key))
+    return out
+
+
+def test_minhash_band_buckets_match_numpy(spark):
+    """minhash_band_buckets' Arrow kernel must be bit-identical to the
+    numpy mirror on the guard domain (text non-null, len >= shingle_n):
+    unicode, exact-boundary-length, repeated-shingle and long texts.
+    Guarded-out docs (NULL, empty, shorter than shingle_n) emit no
+    rows, and minhash_lsh_pairs' pairs are exactly the reference
+    buckets' collisions."""
     from spatialjoincountovershells_spark.operators.dedup import (
-        _minhash_band_buckets_arrow,
         minhash_band_buckets,
-        minhash_lsh_pairs,
     )
 
-    texts = [
+    texts = SAMPLES + [
+        None,
+        "tiny",
+        "abcdefg",                       # shingle_n - 1 chars -> guarded out
         "abcdefgh",                      # exactly shingle_n chars -> 1 shingle
         "abababababababab",
         "the the the the the",
@@ -458,14 +518,28 @@ def test_minhash_arrow_buckets_match_expr(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    arrow = _minhash_band_buckets_arrow(docs, "text", "doc_id", 32, 8, 8)
-    expr = minhash_band_buckets(docs)
-    assert {tuple(x) for x in arrow.collect()} == {
-        tuple(x) for x in expr.collect()
+    got = {tuple(x) for x in minhash_band_buckets(docs).collect()}
+    want = _minhash_buckets_np(texts)
+    assert got == want
+    guarded = {i for i, t in enumerate(texts) if t is None or len(t) < 8}
+    assert guarded >= {0, 1, len(SAMPLES), len(SAMPLES) + 1, len(SAMPLES) + 2}
+    assert not {d for d, _, _ in got} & guarded
+
+    by_bucket: dict = {}
+    for d, b, k in want:
+        by_bucket.setdefault((b, k), []).append(d)
+    want_pairs: dict = {}
+    for ids in by_bucket.values():
+        ids.sort()
+        for i, a in enumerate(ids):
+            for c in ids[i + 1:]:
+                want_pairs[(a, c)] = want_pairs.get((a, c), 0) + 1
+    got_pairs = {
+        (r.doc_a, r.doc_b): r.n_bands_hit
+        for r in minhash_lsh_pairs(docs).collect()
     }
-    pa = {tuple(x) for x in minhash_lsh_pairs(docs, engine="arrow").collect()}
-    pe = {tuple(x) for x in minhash_lsh_pairs(docs, engine="expr").collect()}
-    assert pa == pe and any(p[:2] == (4, 5) for p in pa)
+    n = len(texts)
+    assert got_pairs == want_pairs and got_pairs[(n - 2, n - 1)] == 8
 
 
 def test_crossmodal_dup_planted_classification(spark):

@@ -70,6 +70,28 @@ def test_checkpoint_records_lineage(spark, tmp_path):
     assert resume(spark, p, "other") is None
 
 
+def test_truncated_marker_recomputes(spark, tmp_path):
+    """A marker cut short by a crash mid-write reads as absent: resume
+    returns None and resume_or_compute rewrites the same rows."""
+    p = str(tmp_path / "ck3")
+
+    def compute():
+        return synth_points(spark, 40, seed=7)
+
+    checkpoint(compute(), p, token="tok")
+    clean = sorted(map(tuple, resume(spark, p, "tok").collect()))
+    marker = os.path.join(p, "_SJCS_DONE.json")
+    with open(marker) as f:
+        text = f.read()
+    with open(marker, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert resume(spark, p, "tok") is None
+    again = resume_or_compute(spark, p, token="tok", fn=compute)
+    assert sorted(map(tuple, again.collect())) == clean
+    assert resume(spark, p, "tok") is not None
+    assert not any(f.endswith(".tmp") for f in os.listdir(p))
+
+
 def test_tableio_parquet_standin(spark, tmp_path):
     """No Iceberg runtime in this container: the probe must say so and
     write_table/read_table must degrade to parquet at the same location."""
