@@ -116,7 +116,7 @@ def expected_ring_cells(ratio: float) -> float:
     of radius `ratio` (in cell units) centered uniformly at random
     intersects equals vol(unit cube ⊕ ball) = 1 + 6r + 3πr² + (4π/3)r³.
     Valid for ANY ratio — ring-1 at cs=rmax (ratio 1: ~20.6 of 27) and
-    the sub-rmax refined grids (ratio m = cell_mult: candidate VOLUME
+    the sub-rmax grids (ratio m = rmax/cell_size: candidate VOLUME
     E(m)·cs³ = E(m)/m³·rmax³ falls from 20.6·rmax³ at m=1 toward the
     ball volume 4.19·rmax³ — 10.5 at m=2, 8.1 at m=3).  Used by the
     plan chooser to size per-plan candidate volumes under pruning.
@@ -152,7 +152,7 @@ def explode_ring(
     matters when the probe sits within the radius of the shared corner
     (~52% of probes at cs=rmax; far fewer on coarser grids), so this
     cuts candidate pairs ~25% at cs=rmax; on the sub-rmax refined grids
-    (k = cell_mult >= 2, cs = rmax/k) the kept set shrinks from the
+    (cs = rmax/k, k >= 2) the kept set shrinks from the
     (2k+1)^3 Chebyshev cube toward the ball cover itself — ~2x fewer
     candidate PAIRS at k=2, ~2.5x at k=3 (Steiner formula,
     expected_ring_cells).  Safe under the engine's strict d^2 < r^2

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import squared_distance_expr
 from ..functions.shells import squared_edges
-from .shell_count import _H, _P, _prep
+from .shell_count import _H, _P, _prep, plan_grid
 
 # weights are clamped at 2^62 BEFORE the long cast so a pathologically
 # tiny (but nonzero) d2 saturates identically in Spark and the oracle
@@ -86,10 +86,10 @@ def idw_interpolate(
     edges = np.asarray(
         [radius], dtype=np.float32 if dtype == "float32" else np.float64
     )
-    h, p, nc, edges = _prep(
-        queries, data, edges, box, id_col, h_coords, p_coords, ncells,
-        extra_p=(value_col,),
-    )
+    rmax = float(edges[-1])
+    nc, ring_k = plan_grid("sql", rmax, box, ncells=ncells)
+    h, p = _prep(queries, data, rmax, box, nc, ring_k, id_col, h_coords,
+                 p_coords, extra_p=(value_col,))
     r2 = squared_edges(edges)
     j = h.join(p, "cell_id")
     d2 = squared_distance_expr(_H, _P, box, dtype)

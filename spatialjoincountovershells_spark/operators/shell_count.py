@@ -56,14 +56,14 @@ def apply_salting(
     h: DataFrame,
     p: DataFrame,
     salt_threshold: int,
-    max_salt: int = 64,
     key: str = "cell_id",
 ) -> tuple[DataFrame, DataFrame, str]:
     """Split dense cells across sub-keys so no single reducer owns a hot cell.
 
     Explicit skew handling (BASELINE north_star) on top of AQE's runtime
     skew-join:  a cheap pre-pass counts particles per cell; cells above
-    `salt_threshold` get factor = ceil(n/threshold) (capped) sub-keys.
+    `salt_threshold` get factor = ceil(n/threshold) (capped at
+    _MAX_SALT) sub-keys.
     Particles pick a deterministic sub-key by xxhash64 of their coords;
     halo-ring rows fan out to ALL sub-keys of a hot cell (sequence +
     explode), so the join result is unchanged while the hot cell's work
@@ -72,7 +72,7 @@ def apply_salting(
 
     Sizing: the broadcast hot-cell list is tiny (cells above threshold
     only); the halo fanout multiplies only ring rows that touch hot
-    cells — bounded by 27 * max_salt per halo in the worst case.
+    cells — bounded by 27 * _MAX_SALT per halo in the worst case.
     """
     hot = (
         p.groupBy(key)
@@ -81,7 +81,7 @@ def apply_salting(
         .select(
             key,
             F.least(
-                F.ceil(F.col("_n") / F.lit(salt_threshold)), F.lit(max_salt)
+                F.ceil(F.col("_n") / F.lit(salt_threshold)), F.lit(_MAX_SALT)
             ).cast("int").alias("_factor"),
         )
     )
@@ -91,7 +91,7 @@ def apply_salting(
         .withColumn("_factor", F.coalesce(F.col("_factor"), F.lit(1)))
         .withColumn(
             skey,
-            F.col(key) * F.lit(max_salt)
+            F.col(key) * F.lit(_MAX_SALT)
             + F.pmod(F.xxhash64(*[F.col(c) for c in _P]), F.col("_factor")),
         )
         .drop("_factor")
@@ -100,7 +100,7 @@ def apply_salting(
         h.join(F.broadcast(hot), key, "left")
         .withColumn("_factor", F.coalesce(F.col("_factor"), F.lit(1)))
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_factor") - 1)))
-        .withColumn(skey, F.col(key) * F.lit(max_salt) + F.col("_salt"))
+        .withColumn(skey, F.col(key) * F.lit(_MAX_SALT) + F.col("_salt"))
         .drop("_factor", "_salt")
     )
     return h2, p2, skey
@@ -109,32 +109,18 @@ def apply_salting(
 def _prep(
     halos: DataFrame,
     particles: DataFrame,
-    edges: np.ndarray,
+    rmax: float,
     box: float,
+    nc: int,
+    ring_k: int,
     id_col: str,
     h_coords: tuple[str, str, str],
     p_coords: tuple[str, str, str],
-    ncells: int | None,
     extra_p: Iterable[str] = (),
-    cell_mult: int = 1,
-    n_hint: int | None = None,
 ):
-    edges = np.asarray(edges)
-    rmax = float(edges[-1])
-    if not rmax < box / 2:
-        # precondition of the subset-enumerated periodic search (§2.11.5)
-        raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-    # cell_mult >= 2: sub-rmax cells (size rmax/mult) probed with a
-    # ring-mult neighborhood + the Euclidean prune.  Kept volume shrinks
-    # from 20.6·rmax³ (ring-1) to 10.5·rmax³ at mult=2
-    # (expected_ring_cells) — but for a row-materializing join the
-    # fanout usually costs more than the pruned pairs save, so the
-    # default is 1 (see shell_count's cell_mult note).
-    # n_hint caps the grid at ~occupancy-1 on sparse data (same policy
-    # the auto path uses) — the rmax/mult cap binds at production density.
-    nc = ncells or grid_ncells(rmax / max(cell_mult, 1), box, n_hint=n_hint)
-    # ring depth follows the grid: k*cell_size must cover rmax
-    ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
+    """Both sides of a cell equi-join on the (nc, ring_k) grid from
+    plan_grid: halos exploded over their ring cells, particles keyed by
+    their own cell.  -> (h, p)"""
     h = halos.select(
         F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]
     )
@@ -146,7 +132,7 @@ def _prep(
         *[F.col(c) for c in extra_p],
     )
     p = with_cell(p, nc, box, cols=_P)
-    return h, p, nc, edges
+    return h, p
 
 
 # CPU-pinned per-core cost model fitted to the measured regimes
@@ -182,6 +168,10 @@ F_FUSED_FIXED_CORE_SEC = 5.0
 # (BENCH/BASELINE.md, dgrid cell-refinement sweep: mult 2 4.7 s,
 # 3 6.0 s, 4 140 s).
 _BCAST_CELL_MULT = 2
+# the fused plan's grid targets this many particles per cell
+_FUSED_OCCUPANCY = 128
+# apply_salting splits one hot cell into at most this many sub-keys
+_MAX_SALT = 64
 # dense CSR offsets up to this many cells (64 MB of int32); finer grids
 # fall back to a searchsorted over the sorted cell keys
 _DENSE_CELLS = 16_000_000
@@ -190,61 +180,97 @@ _DENSE_CELLS = 16_000_000
 _SWEEP_PAIRS = 1 << 16
 
 
+def plan_grid(
+    plan: str,
+    rmax: float,
+    box: float = 1000.0,
+    n_particles: int | None = None,
+    ncells: int | None = None,
+) -> tuple[int, int]:
+    """The grid a shell_count plan runs on -> (cells per axis, ring k):
+    the one grid policy of shell_count, choose_plan and the cell joins.
+    An explicit `ncells` overrides it on every plan.
+
+    * 'sql' (and the other row-materializing joins): the finest ring-1
+      grid (cells >= r_max), capped at ~1 particle per cell when
+      `n_particles` is known.  Finer cells LOSE for a join that
+      materializes ring rows: a row costs ~1 us against ~0.6 us saved
+      per pruned pair (cells of r_max/2: 32 s -> 228 s, ref shape).
+    * 'fused': that grid coarsened to ~_FUSED_OCCUPANCY particles per
+      cell (needs `n_particles`): per-cell numpy dispatch and ring
+      fanout dominate a fine grid (ref shape: 35.8 s at nc=78, 16.6 s
+      at nc=36).
+    * 'bcast' / 'dgrid': cells of r_max / _BCAST_CELL_MULT, ring-2.
+
+    ring k is the least with k * cell_size >= r_max.  Raises ValueError
+    unless r_max < box/2, the precondition of the periodic search
+    (§2.11.5).
+    """
+    if not rmax < box / 2:
+        raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
+    if ncells:
+        nc = ncells
+    elif plan in ("bcast", "dgrid"):
+        nc = grid_ncells(rmax / _BCAST_CELL_MULT, box)
+    elif plan == "fused":
+        occ = round((n_particles / _FUSED_OCCUPANCY) ** (1.0 / 3.0))
+        nc = min(grid_ncells(rmax, box), max(2, int(occ)))
+    else:
+        nc = grid_ncells(rmax, box, n_hint=n_particles)
+    return nc, max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
+
+
+def _csr_index_bytes(nc: int, n_rows: int) -> int:
+    """Bytes of the cell index _csr_grid builds over n_rows on an nc^3
+    grid: the dense ``starts`` offsets, or past _DENSE_CELLS the sorted
+    int64 ``keys``."""
+    if nc**3 <= _DENSE_CELLS:
+        return (nc**3 + 1) * (4 if n_rows < 2**31 else 8)
+    return 8 * n_rows
+
+
 def choose_plan(
     n_halos: int,
     n_particles: int,
     rmax: float,
     box: float = 1000.0,
     ncells: int | None = None,
-    fused_occupancy: int = 128,
     max_broadcast_bytes: int = 512 << 20,
-    cell_mult: int = 1,
     weighted: bool = False,
 ) -> str:
-    """Pick the physical plan for shell_count.
+    """Pick the physical plan for shell_count, pricing each plan on the
+    grid it builds (plan_grid).
 
     'dgrid' whenever the DATA (particle) side fits the broadcast
-    budget (~28 B/particle CSR payload + 4 B/cell dense offsets): the
+    budget (~28 B/particle of payload plus the cell index): the
     reference's own architecture — in-memory data grid, streamed
     probes — with no shuffle AND no aggregation; fastest in every
     CPU-pinned measurement at in-memory data scales
     (BENCH/BASELINE.md).
 
     Else 'bcast' whenever the probe (halo) side fits the budget
-    (real payload: 3 coords + id + sorted key ≈ 40 B/halo, plus the
-    dense CSR offsets array of ~4 B/cell; 512 MB covers ~12M probes —
-    reference scale is 10M): the only plan that never shuffles the
-    big table — at 100 TB (where the data side can't possibly fit)
-    that dominates everything else.
+    (~40 B/halo plus the cell index; 512 MB covers ~10M probes —
+    reference scale): the only plan that never shuffles the big table.
+    The cell index is the one _csr_grid builds (_csr_index_bytes).
 
-    Otherwise 'fused' vs 'sql' by estimated per-plan runtime.  Each
-    runs on a DIFFERENT grid: sql on the finest ring-1 grid
-    (occupancy-capped — the same grid shell_count passes to the sql
-    plan when 'auto' picks it, so the cost model and the executed
-    plan agree), fused on a ~`fused_occupancy`-particles/cell grid
-    that amortizes per-group Arrow overhead.  Estimated core-time =
-    that plan's candidate-pair volume / its measured per-core rate;
-    ties go to sql (lower fixed overhead, pure JVM).
+    Otherwise 'fused' vs 'sql' by estimated core-time on each plan's
+    own grid: candidate pairs at its measured per-core rate plus its
+    per-row terms; ties go to sql (lower fixed overhead, pure JVM).
     """
     from .cells import expected_ring_cells
 
-    nc_bcast = grid_ncells(rmax, box)
-    grid_bytes = min(nc_bcast**3, _DENSE_CELLS) * 4
+    nc_bcast, _ = plan_grid("dgrid", rmax, box, ncells=ncells)
     # a weight adds one int64 per particle to the dgrid payload; bcast
     # streams the weights with the particles, so its grid is unchanged
     per_particle = 36 if weighted else 28
-    if n_particles * per_particle + grid_bytes <= max_broadcast_bytes:
+    if (n_particles * per_particle + _csr_index_bytes(nc_bcast, n_particles)
+            <= max_broadcast_bytes):
         return "dgrid"
-    if n_halos * 40 + grid_bytes <= max_broadcast_bytes:
+    if n_halos * 40 + _csr_index_bytes(nc_bcast, n_halos) <= max_broadcast_bytes:
         return "bcast"
 
-    nc_sql = ncells or grid_ncells(
-        rmax / max(cell_mult, 1), box, n_hint=n_particles)
-    nc_fused = max(
-        2,
-        min(grid_ncells(rmax, box),
-            int(round((n_particles / fused_occupancy) ** (1.0 / 3.0)))),
-    )
+    nc_sql, _ = plan_grid("sql", rmax, box, n_particles, ncells)
+    nc_fused, _ = plan_grid("fused", rmax, box, n_particles, ncells)
 
     def ring(nc: int) -> float:
         return expected_ring_cells(rmax / (box / nc))  # Euclidean cell prune
@@ -276,10 +302,8 @@ def shell_count(
     ncells: int | None = None,
     plan: str = "sql",
     salt_threshold: int | None = None,
-    max_salt: int = 64,
     n_halos_est: int | None = None,
     n_particles_est: int | None = None,
-    cell_mult: int = 1,
     weight_col: str | None = None,
 ) -> DataFrame:
     """J1+J2+A1: -> (id_col, shell_idx int, cnt long), nonzero rows only.
@@ -298,85 +322,54 @@ def shell_count(
     id_col keeps its input type on every plan (long, int or string
     halo ids).
 
-    plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel), or
-    'auto' — pick by estimated pairs/core (choose_plan).  'auto' needs
-    row counts: pass n_halos_est / n_particles_est (free if the caller
-    tracks table stats, as any catalog/Iceberg metadata does) or one
-    count() pre-job per missing side runs here — at cluster scale,
-    always pass the estimates.
+    plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel), 'bcast'
+    / 'dgrid' (broadcast grid), or 'auto' — pick by estimated cost
+    (choose_plan).  'auto' and 'fused' need the particle count, 'auto'
+    the halo count too: pass n_halos_est / n_particles_est (free if the
+    caller tracks table stats, as any catalog/Iceberg metadata does) or
+    one count() pre-job per missing side runs here — at cluster scale,
+    always pass the estimates.  Each plan runs on its own grid
+    (plan_grid); `ncells` overrides it.
 
     salt_threshold: if set, run the dense-cell salting pre-pass
     (apply_salting) so no hot cell serializes one reducer/task.
 
-    The broadcast plans ('bcast'/'dgrid') run on cells of size
-    rmax/_BCAST_CELL_MULT (2) probed with ring-2 offsets + Euclidean
-    slab pruning: ~2x fewer candidate pairs than ring-1 at matched
-    correctness (measured, BENCH/BASELINE.md); `ncells` overrides it.
-
-    cell_mult: the same refinement for the 'sql' join plan.  Default 1
-    — a MEASURED negative result (round 4, CPU-pinned ref shape): the
-    join plan pays ~1 us per exploded halo-ring ROW (materialize +
-    shuffle/broadcast-build + hash probe) against ~0.6 us saved per
-    pruned PAIR inside codegen, so mult=2 (fanout 20.6 -> 84 rows/probe
-    for a 2x pair cut) ran 32s -> 200+s.  The broadcast plans keep
-    mult=2 because their ring bookkeeping is a few numpy ops per row
-    INSIDE the kernel, never a row.  The knob stays for extreme-density
-    regimes (ring-1 candidates/probe >~ 3000, where the pair term
-    dominates the fanout term; choose_plan's cost model prices both).
-    Ignored for 'fused' (occupancy-driven grid) and when `ncells` is
-    passed explicitly.  What actually closed the r3 sql candidate-cost
-    gap is the flat codegen-safe prune in explode_ring — the ring-1
-    sql plan itself got 2.7x faster (see cells.py).
+    Input contract, the same on every plan: coordinates on a face (0 or
+    box) or outside the box by rounding error are clamped into the edge
+    cell and measured with the periodic min-image distance (wrap
+    coordinates further out into [0, box) first).  A NaN
+    coordinate takes cell 0 on its axis (the JVM's long cast of NaN,
+    mirrored by the broadcast kernels); its distances are NaN, which
+    fail the strict d^2 < r^2 test, so a NaN particle adds to no count
+    and a NaN halo gets no output row.  An empty side gives an empty
+    result.
     """
+    edges = np.asarray(edges)
+    rmax = float(edges[-1])
     n_est = n_particles_est
     if plan == "auto":
         n_est = n_est or particles.count()
         n_h = n_halos_est or halos.count()
-        rmax = float(np.asarray(edges)[-1])
-        plan = choose_plan(
-            n_h, n_est, rmax, box, ncells, cell_mult=cell_mult,
-            weighted=weight_col is not None,
-        )
-    if plan == "fused" and ncells is None:
-        # the Arrow kernel wants dense cells: target ~128 particles/cell.
-        # Still true after the round-4 bucketed-cogroup rewrite (which
-        # removed per-GROUP overhead): on the fine ring-1 grid the
-        # in-kernel per-CELL numpy dispatch + the 3.3x halo-ring fanout
-        # dominate — measured 35.8s (nc=78) vs 16.6s (nc=36) at the
-        # pinned ref shape; the distance-matrix kernel eats the coarser
-        # grid's extra candidate volume at ~11M pairs/s/core instead
+        plan = choose_plan(n_h, n_est, rmax, box, ncells,
+                           weighted=weight_col is not None)
+    if plan == "fused" and not ncells:
         n_est = n_est or particles.count()
-        cap = max(2, int(round((n_est / 128) ** (1.0 / 3.0))))
-        ncells = max(1, min(grid_ncells(float(np.asarray(edges)[-1]), box), cap))
+    nc, ring_k = plan_grid(plan, rmax, box, n_est, ncells)
+    r2 = squared_edges(edges)
     if plan in ("bcast", "dgrid"):
-        # no shuffle at all -> salting is moot; the Euclidean prune of
-        # the finer-than-ring-1 grid tightens the candidate set from
-        # the (3*rmax)^3 ring-1 cube toward the ball volume itself
-        edges = np.asarray(edges)
-        rmax = float(edges[-1])
-        if not rmax < box / 2:
-            raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-        nc = ncells or grid_ncells(rmax / _BCAST_CELL_MULT, box)
-        # ring depth follows the grid: k*cell_size must cover rmax
-        ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
+        # no shuffle at all -> salting is moot
         grid_plan = _dgrid_plan if plan == "dgrid" else _bcast_plan
         return grid_plan(
-            halos, particles, squared_edges(edges), box, dtype, id_col, nc,
+            halos, particles, r2, box, dtype, id_col, nc,
             h_coords, p_coords, ring_k=ring_k, weight_col=weight_col,
         )
-    h, p, nc, edges = _prep(
-        halos, particles, edges, box, id_col, h_coords, p_coords, ncells,
+    h, p = _prep(
+        halos, particles, rmax, box, nc, ring_k, id_col, h_coords, p_coords,
         extra_p=(weight_col,) if weight_col else (),
-        # the sql plan executes on the same refined occupancy-capped grid
-        # the cost model evaluated (ADVICE r2: chooser/plan grid agreement);
-        # fused's grid was already fixed above (occupancy-driven)
-        cell_mult=cell_mult if plan == "sql" else 1,
-        n_hint=n_est,
     )
     join_key = "cell_id"
     if salt_threshold is not None:
-        h, p, join_key = apply_salting(h, p, salt_threshold, max_salt)
-    r2 = squared_edges(edges)
+        h, p, join_key = apply_salting(h, p, salt_threshold)
     if plan == "fused":
         return _fused_plan(h, p, r2, box, dtype, id_col, join_key,
                            weight_col=weight_col)
@@ -401,8 +394,7 @@ def shell_count(
 
 
 def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
-                weight_col: str | None = None,
-                n_buckets: int | None = None) -> DataFrame:
+                weight_col: str | None = None) -> DataFrame:
     """Cogroup Arrow kernel, bucketed.
 
     Cogrouping per CELL was the round-3 shape; per-group Python/Arrow
@@ -415,7 +407,7 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
     kernel per common cell.  Pair math, f32 discipline and counting
     semantics are unchanged; only the grouping granularity moved, so
     all goldens/oracles are invariant.  Composes with salting: the
-    salted key is cell_id*max_salt+salt, so pmod spreads a hot cell's
+    salted key is cell_id*_MAX_SALT+salt, so pmod spreads a hot cell's
     sub-keys across consecutive buckets.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
@@ -423,14 +415,13 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
     nr = len(r2k)
     bx = np_dtype(box)
     out_cols = [id_col, "shell_idx", "cnt"] + (["wsum"] if weight_col else [])
-    if n_buckets is None:
-        sp = h.sparkSession
-        try:
-            # the conf may be 'auto' under AQE-managed deployments
-            conf_parts = int(sp.conf.get("spark.sql.shuffle.partitions", "200"))
-        except ValueError:
-            conf_parts = 256
-        n_buckets = max(256, conf_parts)
+    try:
+        # the conf may be 'auto' under AQE-managed deployments
+        conf_parts = int(
+            h.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        conf_parts = 256
+    n_buckets = max(256, conf_parts)
 
     def _empty():
         return pd.DataFrame({c: [] for c in out_cols}).astype(
@@ -688,7 +679,10 @@ def _ring_sweep(grid: dict, geom: _Ring, Q: np.ndarray, Q64: np.ndarray):
     idx_t = np.int32 if len(Dx) < 2**31 - 1 else np.int64
     oidx = geom.offs + kk  # raw offset -k..+k -> gap-table row
     r2max, bx = geom.r2[-1], geom.box
-    pc = np.clip(np.floor(Q64 / cs), 0, nc - 1).astype(np.int64)
+    # fmax/fmin, not clip: a NaN coordinate takes cell 0, as with_cell's
+    # long cast gives it in the JVM, instead of an undefined int cast;
+    # its NaN distances then fail d2 < r2max, so it pairs with nothing
+    pc = np.fmin(np.fmax(np.floor(Q64 / cs), 0), nc - 1).astype(np.int64)
     if geom.fastpath_ok:
         inner = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
         parts = ((np.nonzero(inner)[0], False), (np.nonzero(~inner)[0], True))
@@ -1028,17 +1022,10 @@ def range_join_pairs(
     predicate is strict ``d2 < radius^2`` (SURVEY §2.3 J3 note).
     """
     edges = np.asarray([radius], dtype=np.float32 if dtype == "float32" else np.float64)
-    h, p, nc, edges = _prep(
-        halos,
-        particles,
-        edges,
-        box,
-        id_col,
-        h_coords,
-        p_coords,
-        ncells,
-        extra_p=(particle_id_col,),
-    )
+    rmax = float(edges[-1])
+    nc, ring_k = plan_grid("sql", rmax, box, ncells=ncells)
+    h, p = _prep(halos, particles, rmax, box, nc, ring_k, id_col, h_coords,
+                 p_coords, extra_p=(particle_id_col,))
     r2 = squared_edges(edges)
     j = h.join(p, "cell_id")
     d2 = squared_distance_expr(_H, _P, box, dtype)
@@ -1076,11 +1063,9 @@ def range_anti_join(
     )
     r2 = squared_edges(edges)
     rmax = float(edges[-1])
-    if not rmax < box / 2:
-        raise ValueError(f"radius={rmax} must be < box/2={box / 2}")
-    nc = ncells or grid_ncells(rmax, box)
+    nc, ring_k = plan_grid("sql", rmax, box, ncells=ncells)
     s = sites.select(*[F.col(c).alias(a) for c, a in zip(s_coords, _H)])
-    s = explode_ring(s, nc, box, cols=_H, k=1, prune_radius=rmax,
+    s = explode_ring(s, nc, box, cols=_H, k=ring_k, prune_radius=rmax,
                      out="_scell")
     p = with_cell(particles, nc, box, cols=p_coords, out="_pcell")
     d2 = squared_distance_expr(_H, p_coords, box, dtype)

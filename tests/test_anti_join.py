@@ -27,14 +27,17 @@ def test_anti_join_vs_bruteforce(spark):
         [(float(x), float(y), float(z)) for x, y, z in sites],
         "x double, y double, z double",
     )
-    out = range_anti_join(sp, ss, radius=r, dtype="float64")
-    assert out.columns == ["particle_id", "x", "y", "z"]  # passthrough
-    got = {r_.particle_id for r_ in out.collect()}
     dd = np.abs(pts[:, None, :] - sites[None, :, :])
     dd = np.minimum(dd, BOX - dd)
     d2 = (dd**2).sum(axis=2)
     want = set(np.nonzero((d2 >= r * r).all(axis=1))[0].tolist())
-    assert got == want and 0 < len(want) < len(pts)
+    assert 0 < len(want) < len(pts)
+    # ncells=20: cells of 50 < r, so the site ring must go 3 cells deep
+    for ncells in (None, 20):
+        out = range_anti_join(sp, ss, radius=r, dtype="float64",
+                              ncells=ncells)
+        assert out.columns == ["particle_id", "x", "y", "z"]  # passthrough
+        assert {r_.particle_id for r_ in out.collect()} == want
 
 
 def test_anti_join_strict_boundary(spark):

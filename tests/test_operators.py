@@ -207,7 +207,7 @@ def test_salting_preserves_counts(spark, plan):
     halos = _df_points(spark, H, id_col="halo_id")
     parts = _df_points(spark, P)
     res = shell_count(
-        halos, parts, edges, plan=plan, salt_threshold=5, max_salt=8
+        halos, parts, edges, plan=plan, salt_threshold=5
     )
     got = dense_from_long(
         [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()], len(H), len(edges)
@@ -230,7 +230,7 @@ def test_salting_splits_hot_cells(spark):
         ),
         4, cols=("_hx", "_hy", "_hz"),
     )
-    h2, p2, skey = apply_salting(halos, parts, salt_threshold=2, max_salt=8)
+    h2, p2, skey = apply_salting(halos, parts, salt_threshold=2)
     plain = parts.select("cell_id").distinct().count()
     salted = p2.select(skey).distinct().count()
     assert salted > plain  # hot cells actually split

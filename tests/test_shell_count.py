@@ -94,7 +94,7 @@ def test_skewed_clusters_vs_oracle(spark, plan):
         halos = _df_points(spark, H, id_col="halo_id")
         parts = _df_points(spark, P)
         salted = shell_count(halos, parts, edges, plan="sql",
-                             salt_threshold=50, max_salt=8)
+                             salt_threshold=50)
         rows = [(r.halo_id, r.shell_idx, r.cnt) for r in salted.collect()]
         assert dense_from_long(rows, len(H), len(edges)).tolist() == want.tolist()
 
@@ -424,25 +424,103 @@ def test_nn_dist_cdf_requires_id_in_self_mode(spark):
         nn_dist_cdf(df, np.array([10.0]))
 
 
-# --------------------------------------------- sub-rmax refined join grid
+# ------------------------------------------------------ grid policy
 
 
-@pytest.mark.parametrize("mult", [1, 2, 3])
-def test_sql_cell_mult_matches_oracle(spark, mult):
-    """The refined (cells = rmax/mult, ring-mult + Euclidean prune) sql
-    grid — the r4 candidate-volume fix — is answer-invariant vs the
-    numpy oracle at every mult, including wrap-heavy radii."""
+def test_sql_matches_oracle(spark):
+    """The sql plan matches the numpy oracle on its own ring-1 grid and
+    on explicit sub-rmax grids (cells of rmax/2 and rmax/3, probed
+    ring-2 and ring-3 with the Euclidean prune), including wrap-heavy
+    radii."""
+    from spatialjoincountovershells_spark.operators.cells import grid_ncells
+
     P = synth_points_np(800, seed=7)
     H = synth_points_np(40, seed=1007)
     for spec in [(0.5, 60.0, 6), (10.0, 300.0, 5)]:
         edges = logspace_edges(*spec)
-        halos = _df_points(spark, H, id_col="halo_id")
-        parts = _df_points(spark, P)
-        res = shell_count(halos, parts, edges, plan="sql", cell_mult=mult)
-        rows = [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()]
-        got = dense_from_long(rows, len(H), len(edges))
         want = oracle_shell_counts(H, P, squared_edges(edges))
-        assert got.tolist() == want.tolist()
+        for m in (1, 2, 3):
+            nc = grid_ncells(float(edges[-1]) / m) if m > 1 else None
+            got = _run(spark, H, P, edges, "sql", ncells=nc)
+            assert got.tolist() == want.tolist()
+
+
+# (plan, rmax, n_particles, ncells) -> (ncells, ring_k): the grids each
+# plan built before the policy moved into plan_grid (box 1000)
+_PINNED_GRIDS = [
+    # sql: ring-1 cells >= rmax, capped at cbrt(n) when n is known
+    (("sql", 20.0, None, None), (50, 1)),
+    (("sql", 20.0, 6_000_000, None), (50, 1)),  # dense: the rmax cap binds
+    (("sql", 5.0, 1000, None), (10, 1)),  # sparse: the cbrt(n) cap binds
+    (("sql", 5.0, None, None), (200, 1)),
+    (("sql", 12.77, 6_000_000, None), (78, 1)),
+    (("sql", 20.0, None, 260), (260, 6)),
+    (("sql", 499.9, None, None), (2, 1)),
+    # fused: ~128 particles per cell, at most the ring-1 grid, at least 2
+    (("fused", 20.0, 6_000_000, None), (36, 1)),
+    (("fused", 12.77, 6_000_000, None), (36, 1)),
+    (("fused", 20.0, 600_000, None), (17, 1)),
+    (("fused", 5.0, 1000, None), (2, 1)),
+    (("fused", 1.0, 10**9, None), (198, 1)),
+    (("fused", 20.0, 6_000_000, 8), (8, 1)),
+    (("fused", 499.9, 6_000_000, None), (2, 1)),
+    # bcast / dgrid: cells of rmax/2 probed ring-2, n ignored
+    (("dgrid", 20.0, None, None), (100, 2)),
+    (("dgrid", 8.0, 1000, None), (250, 2)),
+    (("bcast", 12.77, 6_000_000, None), (156, 2)),
+    (("bcast", 5.0, None, 260), (260, 2)),
+    (("dgrid", 20.0, None, 8), (8, 1)),
+    (("dgrid", 499.9, None, None), (4, 2)),
+    (("bcast", 499.9, None, None), (4, 2)),
+]
+
+
+@pytest.mark.parametrize("args,want", _PINNED_GRIDS)
+def test_plan_grid_pinned(args, want):
+    from spatialjoincountovershells_spark.operators.shell_count import plan_grid
+
+    plan, rmax, n, ncells = args
+    assert plan_grid(plan, rmax, 1000.0, n, ncells) == want
+
+
+@pytest.mark.parametrize("plan", ["sql", "fused", "bcast", "dgrid"])
+def test_plan_grid_rmax_guard(plan):
+    from spatialjoincountovershells_spark.operators.shell_count import plan_grid
+
+    with pytest.raises(ValueError, match="box/2"):
+        plan_grid(plan, 500.0, 1000.0, 1000, None)
+
+
+def test_choose_plan_prices_the_csr_index_it_builds():
+    """The broadcast budget prices the cell index _csr_grid allocates on
+    the r_max/2 grid: dense offsets, or past _DENSE_CELLS sorted keys."""
+    from spatialjoincountovershells_spark.operators.shell_count import (
+        _DENSE_CELLS,
+        _csr_grid,
+        _csr_index_bytes,
+        choose_plan,
+        plan_grid,
+    )
+
+    # rmax 8: 250^3 int32 offsets (59.6 MiB), not the ring-1 125^3
+    assert _csr_index_bytes(plan_grid("dgrid", 8.0)[0], 10**6) == (
+        250**3 + 1) * 4
+    rng = np.random.default_rng(3)
+    n = 5000
+    for rmax, dense in ((40.0, True), (5.0, False)):
+        nc, _ = plan_grid("dgrid", rmax)
+        assert (nc**3 <= _DENSE_CELLS) == dense
+        key = rng.integers(0, nc**3, n, dtype=np.int64)
+        xyz = [rng.random(n, dtype=np.float32) for _ in range(3)]
+        grid = _csr_grid(key, nc, xyz)
+        index = grid["starts"] if dense else grid["keys"]
+        assert "keys" not in grid if dense else "starts" not in grid
+        assert _csr_index_bytes(nc, n) == index.nbytes
+        # dgrid exactly when the particle payload plus that index fits
+        need = n * 28 + index.nbytes
+        assert choose_plan(10**9, n, rmax, max_broadcast_bytes=need) == "dgrid"
+        assert choose_plan(10**9, n, rmax,
+                           max_broadcast_bytes=need - 1) != "dgrid"
 
 
 def test_explode_ring_k_prune_covers_and_is_tight(spark):
@@ -487,29 +565,61 @@ def test_explode_ring_k_prune_covers_and_is_tight(spark):
         assert true_pairs <= got
 
 
-def test_manual_sql_grid_matches_auto_grid_on_sparse_data(spark):
+def test_manual_sql_grid_matches_auto_grid_on_sparse_data(spark, monkeypatch):
     """VERDICT r3 #6: an explicit plan='sql' call WITH a row-count
     estimate must execute on the same occupancy-capped grid the auto
-    path's cost model evaluates — on sparse data the cbrt(n) cap binds,
-    not the rmax cap."""
-    from spatialjoincountovershells_spark.operators.cells import grid_ncells
-    from spatialjoincountovershells_spark.operators.shell_count import _prep
+    path's cost model evaluates — both take it from plan_grid, and on
+    sparse data the cbrt(n) cap binds, not the rmax cap."""
+    from spatialjoincountovershells_spark.operators import shell_count as sc
 
     n_sparse = 1000  # cbrt = 10 << 1000/rmax = 200 at rmax 5
-    edges = np.array([5.0], dtype=np.float32)
-    H = synth_points_np(20, seed=5)
-    P = synth_points_np(n_sparse, seed=6)
-    halos = _df_points(spark, H, id_col="halo_id")
-    parts = _df_points(spark, P)
-    _, _, nc_manual, _ = _prep(
-        halos, parts, edges, 1000.0, "halo_id",
-        ("x", "y", "z"), ("x", "y", "z"), None,
-        cell_mult=1, n_hint=n_sparse,
-    )
-    assert nc_manual == grid_ncells(5.0, 1000.0, n_hint=n_sparse) == 10
-    # and without the hint the old (over-fine) grid would have been used
-    _, _, nc_nohint, _ = _prep(
-        halos, parts, edges, 1000.0, "halo_id",
-        ("x", "y", "z"), ("x", "y", "z"), None, cell_mult=1,
-    )
-    assert nc_nohint == 200
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append((args[0], real(*args, **kwargs)))
+        return calls[-1][1]
+
+    real = sc.plan_grid
+    monkeypatch.setattr(sc, "plan_grid", spy)
+    halos = _df_points(spark, synth_points_np(20, seed=5), id_col="halo_id")
+    parts = _df_points(spark, synth_points_np(n_sparse, seed=6))
+    sc.shell_count(halos, parts, np.array([5.0], dtype=np.float32),
+                   plan="sql", n_particles_est=n_sparse)
+    assert calls == [("sql", (10, 1))]
+    assert sc.choose_plan(20, n_sparse, 5.0, max_broadcast_bytes=0) == "sql"
+    assert ("sql", (10, 1)) in calls[1:]
+    # and without the estimate the over-fine rmax grid would be used
+    assert real("sql", 5.0, 1000.0) == (200, 1)
+
+
+_NAN = np.float32("nan")
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("plan", ["sql", "fused", "bcast", "dgrid", "auto"])
+def test_input_contract_vs_oracle(spark, plan, monkeypatch):
+    """On-face, slightly out-of-box, NaN and empty-side inputs match the
+    brute-force oracle on every plan, with RuntimeWarnings raised as
+    errors here and in the Python workers (a NaN cell index used to
+    come from an undefined float->int cast in the broadcast kernels)."""
+    monkeypatch.setitem(spark.sparkContext.environment, "PYTHONWARNINGS",
+                        "error::RuntimeWarning")
+    P = synth_points_np(300, seed=12)
+    H = synth_points_np(12, seed=1012)
+    H[0] = (0.0, 0.0, 0.0)  # on the lower faces
+    P[0] = (1000.0, 0.0, 0.0)  # on the upper face: coincident with H[0]
+    P[1] = (0.5, 999.5, 1000.0)
+    H[1] = (-1e-3, 500.0, 1000.001)  # just outside the box
+    P[2] = (-1e-3, 3.0, 999.0)
+    P[3] = (1000.001, 998.0, 2.0)
+    H[2] = (_NAN, 10.0, 10.0)  # NaN halo: no output row
+    P[4] = (10.0, _NAN, 10.0)  # NaN particle: adds to no count
+    P[5] = (_NAN, _NAN, _NAN)
+    edges = logspace_edges(0.5, 60.0, 6)
+    r2 = squared_edges(edges)
+    for hh, pp in ((H, P), (H[:0], P), (H, P[:0])):
+        got = _run(spark, hh, pp, edges, plan)
+        want = oracle_shell_counts(hh, pp, r2)
+        assert got.tolist() == want.tolist()
+    want = oracle_shell_counts(H, P, r2)
+    assert want[0, 0] >= 1 and want[2].sum() == 0
