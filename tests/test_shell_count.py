@@ -427,11 +427,12 @@ def test_nn_dist_cdf_requires_id_in_self_mode(spark):
 # ------------------------------------------------------ grid policy
 
 
-def test_sql_matches_oracle(spark):
-    """The sql plan matches the numpy oracle on its own ring-1 grid and
-    on explicit sub-rmax grids (cells of rmax/2 and rmax/3, probed
-    ring-2 and ring-3 with the Euclidean prune), including wrap-heavy
-    radii."""
+@pytest.mark.parametrize("mult", [1, 2, 3])
+def test_sql_cell_mult_matches_oracle(spark, mult):
+    """The sql plan matches the numpy oracle on its own ring-1 grid
+    (mult 1) and on explicit sub-rmax grids of cells rmax/mult, probed
+    ring-mult with the Euclidean prune (mult 2, 3), including
+    wrap-heavy radii."""
     from spatialjoincountovershells_spark.operators.cells import grid_ncells
 
     P = synth_points_np(800, seed=7)
@@ -439,10 +440,9 @@ def test_sql_matches_oracle(spark):
     for spec in [(0.5, 60.0, 6), (10.0, 300.0, 5)]:
         edges = logspace_edges(*spec)
         want = oracle_shell_counts(H, P, squared_edges(edges))
-        for m in (1, 2, 3):
-            nc = grid_ncells(float(edges[-1]) / m) if m > 1 else None
-            got = _run(spark, H, P, edges, "sql", ncells=nc)
-            assert got.tolist() == want.tolist()
+        nc = grid_ncells(float(edges[-1]) / mult) if mult > 1 else None
+        got = _run(spark, H, P, edges, "sql", ncells=nc)
+        assert got.tolist() == want.tolist()
 
 
 # (plan, rmax, n_particles, ncells) -> (ncells, ring_k): the grids each
